@@ -3058,20 +3058,18 @@ qt2 AS (SELECT query_id, term, q_tf FROM cdr WHERE NOT is_common OR n_rare = 0)
         _sql(_BASE, _query_ctes(1.0), _TOPK_CTES) + _topk_select,
     )
 
-    # Index-time stopping (build.py:build_index_stopped): build with the
-    # stop list deleted before counting — dl/avg_dl shift to surviving
-    # tokens (NOT equivalent to serve-time ignoring), stopped query
-    # terms hit the ordinary OOV drop. Oracle = the full chain over a
-    # token stream with the same terms filtered.
+    # Index-time stopping (build.py:build_index with stop_terms): build
+    # with the stop list deleted before counting — dl/avg_dl shift to
+    # surviving tokens (NOT equivalent to serve-time ignoring), stopped
+    # query terms hit the ordinary OOV drop. Oracle = the full chain over
+    # a token stream with the same terms filtered.
     _STOP_TERMS = ["the", "a"]
 
     def _topk_stopped(spark, sf):
-        from jassv2_spark.operators.build import build_index_stopped
-
-        idx = build_index_stopped(
-            _docs(spark, sf), _STOP_TERMS,
+        idx = build_index(
+            _docs(spark, sf),
             text_col="text", key_col="doc_id", doc_id_col="doc_id",
-            conf=BuildConf(k1=K1, b=B, tokenizer="parity"),
+            conf=BuildConf(k1=K1, b=B, tokenizer="parity"), stop_terms=_STOP_TERMS,
         )
         return search(idx, _queries_df(spark), k=K, with_keys=False).select(
             "query_id", "doc_id",

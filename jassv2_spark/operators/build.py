@@ -3,10 +3,12 @@
 Reproduces the reference build semantics (`tools/JASS_index.cpp:145-404`)
 with a Spark-first physical plan:
 
-  documents ──tokenize (Arrow UDF / JVM regexp)──▶ (doc_id, term) tokens
-    ─groupBy(doc_id, term)─▶ tf  [shuffle keyed (doc_id,term): skew-free,
-                                  map-side partial agg]
-    ─groupBy(doc_id)─▶ doc_lengths (= Σ tf, one pass over tf, co-keyed)
+  documents ──count_terms: tokenize + stop + stem + per-doc tf + dl in
+    one map-only Arrow pass (JVM explode + aggregate for 'ascii')──▶
+    counts(doc_id, term, cnt, dl)  [no token-occurrence shuffle; every
+                                    build — in memory, staged, streaming —
+                                    runs this one pass]
+    ─groupBy(doc_id)─▶ doc_lengths
     ─groupBy(term)─▶ term df      [counts: partial agg absorbs Zipf skew]
     ─join─▶ ATIRE BM25 column expression (k1=0.9, b=0.4, idf=ln(N/df))
     ─agg min/max─▶ uniform quantization to impacts in [1,1024]
@@ -46,10 +48,10 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -188,21 +190,51 @@ def build_prequantized_index(
     keys = assign_doc_ids(pre.select("key").distinct(), key_col="key", out_col="doc_id",
                           num_partitions=nparts)
     doc_map = keys.select("doc_id", "key")
-    n_docs = doc_map.count()
-
     impacts = pre.join(keys, "key").select("term", "doc_id", "impact")
+
+    # one driver action for every scalar the index records: N, the impact
+    # extremes and the collection length (Σdl = Σimpact)
+    row = (
+        doc_map.agg(F.count(F.lit(1)).alias("n"))
+        .crossJoin(
+            impacts.agg(
+                F.min("impact").alias("lo"),
+                F.max("impact").alias("hi"),
+                F.coalesce(F.sum("impact"), F.lit(0)).alias("cl"),
+            )
+        )
+        .collect()[0]
+    )
+    n_docs, collection_length = int(row["n"]), int(row["cl"])
+
     doc_lengths = impacts.groupBy("doc_id").agg(F.sum("impact").alias("dl"))
     postings = impacts.select("doc_id", "term", F.col("impact").alias("tf"))
     scored = impacts.select("term", "doc_id", F.col("impact").cast("double").alias("score"))
 
     pre_df = impacts.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    segments = build_segments(
-        impacts.join(pre_df, "term"), n_docs, conf.shard_size
+    segments, seg_stats, term_stats = _segment_tables(
+        impacts.join(pre_df, "term"), n_docs, conf, cache
     )
     if cache:
-        segments = segments.persist()
         doc_map = doc_map.persist()
+    return Index(
+        spark=spark, doc_map=doc_map, doc_lengths=doc_lengths, postings=postings,
+        scored=scored, impacts=impacts, segments=segments, seg_stats=seg_stats,
+        term_stats=term_stats, n_docs=n_docs, collection_length=collection_length,
+        mean_doc_length=float(collection_length) / n_docs if n_docs else 0.0,
+        min_rsv=float(row["lo"] or 0), max_rsv=float(row["hi"] or 0), conf=conf,
+    )
 
+
+def _segment_tables(
+    impacts: DataFrame, n_docs: int, conf: BuildConf, cache: bool
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(term, doc_id, df, impact) → the segments table and the vocabulary
+    metadata rolled up from it: seg_stats(term, impact, seg_freq) and
+    term_stats(term, df, max_impact, n_segments)."""
+    segments = build_segments(impacts, n_docs, conf.shard_size)
+    if cache:
+        segments = segments.persist()
     seg_stats = segments.groupBy("term", "impact").agg(F.sum("part_freq").alias("seg_freq"))
     term_stats = seg_stats.groupBy("term").agg(
         F.sum("seg_freq").alias("df"),
@@ -212,19 +244,10 @@ def build_prequantized_index(
     if cache:
         seg_stats = seg_stats.persist()
         term_stats = term_stats.persist()
-
-    mm = impacts.agg(F.min("impact"), F.max("impact")).collect()[0]
-    collection_length = doc_lengths.agg(F.sum("dl")).collect()[0][0] or 0
-    return Index(
-        spark=spark, doc_map=doc_map, doc_lengths=doc_lengths, postings=postings,
-        scored=scored, impacts=impacts, segments=segments, seg_stats=seg_stats,
-        term_stats=term_stats, n_docs=n_docs, collection_length=int(collection_length),
-        mean_doc_length=float(collection_length) / n_docs if n_docs else 0.0,
-        min_rsv=float(mm[0] or 0), max_rsv=float(mm[1] or 0), conf=conf,
-    )
+    return segments, seg_stats, term_stats
 
 
-def _count_tokens_udf(tokenizer_mode: str, stem: bool, text_col: str, did: str):
+def _count_tokens_udf(stem: bool, stop: frozenset, text_col: str, did: str):
     """mapInPandas kernel: documents → (doc_id, term, cnt, dl) rows.
 
     This is the reference's doc-at-a-time accumulation
@@ -262,6 +285,8 @@ def _count_tokens_udf(tokenizer_mode: str, stem: bool, text_col: str, did: str):
             dls: list = []
             for text in pdf[text_col]:
                 toks = tokenize(text, xml=True)
+                if stop:
+                    toks = [t for t in toks if t not in stop]
                 if stem_tokens is not None:
                     toks = stem_tokens(toks)
                 c = Counter(toks)
@@ -285,6 +310,44 @@ def _count_tokens_udf(tokenizer_mode: str, stem: bool, text_col: str, did: str):
     return run, schema
 
 
+def count_terms(
+    docs: DataFrame,
+    *,
+    text_col: str = "text",
+    doc_id_col: str = "doc_id",
+    conf: BuildConf | None = None,
+    stop_terms: Iterable[str] | None = None,
+) -> DataFrame:
+    """The build's one counting pass: documents → counts(doc_id, term, cnt,
+    dl), where dl is the document's token count after stopping.
+
+    Every build runs through here — in memory, staged (plans/persist.py)
+    and streaming (streaming/incremental.py) — so all of them honour the
+    tokenizer mode, ``conf.stem`` and the stop set identically. Stop terms
+    are matched against the surface tokens, before stemming. 'parity' is
+    the fused map-only kernel above (no token-occurrence shuffle); 'ascii'
+    stays pure JVM (explode + aggregate; no Python when stem is off)."""
+    conf = conf or BuildConf()
+    stop = frozenset(str(t) for t in stop_terms or ())
+    if conf.tokenizer == "ascii":
+        tok_col = spark_tokens(text_col, mode="ascii", xml=True)
+        if stop:
+            tok_col = F.filter(tok_col, lambda t: ~t.isin(*sorted(stop)))
+        if conf.stem:
+            from jassv2_spark.functions.stem import spark_stem
+
+            tok_col = spark_stem(tok_col)
+        tokens = docs.select(
+            F.col(doc_id_col).cast("long").alias("doc_id"), F.explode(tok_col).alias("term")
+        )
+        counts = tokens.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("cnt"))
+        return counts.withColumn("dl", F.sum("cnt").over(Window.partitionBy("doc_id")))
+    run, schema = _count_tokens_udf(conf.stem, stop, text_col, doc_id_col)
+    return docs.select(F.col(doc_id_col).cast("long").alias(doc_id_col), text_col).mapInPandas(
+        run, schema=schema
+    )
+
+
 def build_index(
     docs: DataFrame,
     *,
@@ -293,6 +356,7 @@ def build_index(
     doc_id_col: str | None = None,
     conf: BuildConf | None = None,
     cache: bool = True,
+    stop_terms: Iterable[str] | None = None,
 ) -> Index:
     """Build the impact-ordered index from a documents DataFrame.
 
@@ -300,6 +364,19 @@ def build_index(
     (tie-breaks follow it); otherwise dense 1-based ids are assigned by
     ``key_col`` order (reference ingest-order semantics,
     `source/index_manager.h:219-222`).
+
+    ``stop_terms``: INDEX-TIME STOPPING — the given terms are removed
+    before any counting, the classic size/latency lever (ATIRE and the
+    Terrier/Indri default configs both shipped index-time stop lists; the
+    reference indexes every token, `source/parser.cpp` has no stop path).
+    Semantics are exactly "build over text with those tokens deleted":
+    stopped terms vanish from the vocabulary (queries containing them hit
+    the ordinary silent OOV drop), document lengths count surviving tokens
+    only, and collection stats follow — NOT the same ranking as post-hoc
+    ignoring the terms at serve time, because dl and avg_dl shift (that
+    difference is the point: BM25's length normalization stops being
+    dominated by stopword mass). A doc whose every token is stopped keeps
+    its docid (reference ingest semantics) with no postings.
 
     Physical plan (shuffle-minimal): one map-only pass fuses tokenize +
     per-doc tf + doc length (no token-occurrence shuffle); df aggregation
@@ -332,23 +409,9 @@ def build_index(
 
     n_docs = docs.count()
 
-    if conf.tokenizer == "ascii":
-        # pure-JVM path: explode + aggregate (no Python when stem is off)
-        from pyspark.sql import Window as _W
-
-        tok_col = spark_tokens(text_col, mode="ascii", xml=True)
-        if conf.stem:
-            from jassv2_spark.functions.stem import spark_stem
-
-            tok_col = spark_stem(tok_col)
-        tokens = docs.select(F.col(did).alias("doc_id"), F.explode(tok_col).alias("term"))
-        counts = tokens.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("cnt"))
-        counts = counts.withColumn("dl", F.sum("cnt").over(_W.partitionBy("doc_id")))
-    else:
-        run, cnt_schema = _count_tokens_udf(conf.tokenizer, conf.stem, text_col, did)
-        counts = docs.select(F.col(did).cast("long").alias(did), text_col).mapInPandas(
-            run, schema=cnt_schema
-        )
+    counts = count_terms(
+        docs, text_col=text_col, doc_id_col=did, conf=conf, stop_terms=stop_terms
+    )
     return build_index_from_counts(
         counts, doc_map, n_docs, conf=conf, cache=cache
     )
@@ -369,10 +432,15 @@ def build_index_from_counts(
     lengths come from the interchange file rather than a tokenizer pass,
     `tools/ciff_to_JASS.cpp:180-260`). ``collection_length`` overrides the
     Σcnt-derived value when the source carries authoritative doc lengths
-    that may differ from Σtf (e.g. a CIFF built with stopping).
+    that may differ from Σtf (e.g. a CIFF built with stopping). Counts
+    seeded without ``dl`` (merged, takedown and streamed build dirs carry
+    only (doc_id, term, cnt)) take dl = Σcnt per doc, which is exactly
+    what the counting pass records.
     """
     conf = conf or BuildConf()
     spark = counts.sparkSession
+    if "dl" not in counts.columns:
+        counts = counts.withColumn("dl", F.sum("cnt").over(Window.partitionBy("doc_id")))
     if cache:
         counts = counts.persist()
     postings = counts.select(
@@ -535,23 +603,10 @@ def build_index_from_counts(
 
     impacts = scored.select("term", "doc_id", impact_col.alias("impact"))
 
-    segments = build_segments(
-        scored.select("term", "doc_id", "df", impact_col.alias("impact")),
-        n_docs,
-        conf.shard_size,
+    segments, seg_stats, term_stats = _segment_tables(
+        scored.select("term", "doc_id", "df", impact_col.alias("impact")), n_docs, conf, cache
     )
     if cache:
-        segments = segments.persist()
-
-    seg_stats = segments.groupBy("term", "impact").agg(F.sum("part_freq").alias("seg_freq"))
-    term_stats = seg_stats.groupBy("term").agg(
-        F.sum("seg_freq").alias("df"),
-        F.max("impact").alias("max_impact"),
-        F.count(F.lit(1)).alias("n_segments"),
-    )
-    if cache:
-        seg_stats = seg_stats.persist()
-        term_stats = term_stats.persist()
         doc_map = doc_map.persist()
 
     return Index(
@@ -572,66 +627,4 @@ def build_index_from_counts(
         conf=conf,
         profile=profile,
         counts=counts if cache else None,
-    )
-
-
-def build_index_stopped(
-    docs: DataFrame,
-    stop_terms: list[str],
-    *,
-    text_col: str = "text",
-    key_col: str = "url",
-    doc_id_col: str | None = None,
-    conf: BuildConf | None = None,
-    cache: bool = True,
-) -> Index:
-    """INDEX-TIME STOPPING: build with the given terms removed before any
-    counting — the classic size/latency lever (ATIRE and the Terrier/
-    Indri default configs both shipped index-time stop lists; the
-    reference indexes every token, `source/parser.cpp` has no stop
-    path). Semantics are exactly "build over text with those tokens
-    deleted": stopped terms vanish from the vocabulary (queries
-    containing them hit the ordinary silent OOV drop), document lengths
-    count surviving tokens only, and collection stats follow — NOT the
-    same ranking as post-hoc ignoring the terms at serve time, because
-    dl and avg_dl shift (that difference is the point: BM25's length
-    normalization stops being dominated by stopword mass).
-
-    Implementation: one tokenize pass → counts with post-stop dl →
-    the shared `build_index_from_counts` scoring/quantization/segment
-    pipeline (the CIFF-import seam). A doc whose every token is stopped
-    keeps its docid (reference ingest semantics) with no postings.
-
-    Scale shape: identical to `build_index` minus the stopped tokens'
-    shuffle mass — the Zipf head is exactly what gets dropped, so the
-    (term, doc) exchange loses its heaviest keys."""
-    conf = conf or BuildConf()
-    from jassv2_spark.functions.tokenizer import spark_tokens
-
-    if doc_id_col is not None:
-        base = docs.select(
-            F.col(doc_id_col).cast("long").alias("doc_id"),
-            F.col(key_col).cast("string").alias("key"),
-            F.col(text_col).alias("__text"),
-        )
-    else:
-        from jassv2_spark.sources.docids import assign_doc_ids
-
-        base = assign_doc_ids(
-            docs.select(F.col(key_col).cast("string").alias("key"), F.col(text_col).alias("__text")),
-            key_col="key", out_col="doc_id",
-        )
-    stop = [str(s) for s in stop_terms]
-    toks = base.select(
-        "doc_id",
-        F.explode(spark_tokens("__text", mode=conf.tokenizer)).alias("term"),
-    )
-    kept = toks.where(~F.col("term").isin(stop)) if stop else toks
-    cnt = kept.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("cnt"))
-    dl = cnt.groupBy("doc_id").agg(F.sum("cnt").alias("dl"))
-    counts = cnt.join(dl, "doc_id")
-    doc_map = base.select("doc_id", "key")
-    n_docs = doc_map.count()
-    return build_index_from_counts(
-        counts, doc_map, n_docs, conf=conf, cache=cache
     )

@@ -1,52 +1,60 @@
 """Checkpoint-resumable persisted index build with per-partition lineage.
 
 north_rule requirement: "resumable from checkpoint with per-partition
-lineage + metrics". The build is a linear chain of stages; EVERY stage
-reads only the previous stage's checkpointed parquet, so a build killed at
-any point resumes by skipping exactly the stages whose completion markers
-exist:
+lineage + metrics". The build is the in-memory pipeline
+(operators/build.py: ``count_terms`` → ``build_index_from_counts``) with
+a checkpoint after each stage; a build killed at any point resumes by
+skipping exactly the stages whose completion markers exist:
 
-  doc_map      documents → dense doc ids               (<out>/doc_map)
-  counts       tokenize → (doc_id, term, cnt)          (<out>/counts)
-  doc_lengths  Σcnt per doc                            (<out>/doc_lengths)
-  stats        N, collection length, mean dl           (<out>/stats.json)
-  impacts      BM25 → global min/max → quantize        (<out>/impacts)
+  doc_map      documents → dense doc ids + text        (<out>/doc_map)
+  counts       the counting pass → (doc_id, term, cnt, dl)  (<out>/counts)
+  doc_lengths  per-doc token count                     (<out>/doc_lengths)
   segments     impact-ordered shard rows, term-bucket-partitioned
   seg_stats / term_stats
 
-Per stage: parquet data, `_checkpoints/<stage>.json` marker (rows, wall
-sec), `_lineage/<stage>/` per-partition lineage (partition_id, rows,
-min/max key hash). The layout replaces JASS v1's four binary files
-(`source/serialise_jass_v1.h:43-68`): `segments/` term-bucket partitioning
-+ parquet min/max stats replace the CIvocab.bin binary search
-(`source/deserialised_jass_v1.h:311-334`); `doc_map/` replaces
-CIdoclist.bin. The reference build itself is single-process with no resume
-(`tools/JASS_index.cpp:270-404`) — at 10^12 docs checkpointing is the point.
+``stats.json`` (N, collection length, mean dl, quantization min/max, build
+conf) is written before the table stages. Per stage: parquet data,
+`_checkpoints/<stage>.json` marker (rows, wall sec), `_lineage/<stage>/`
+per-partition lineage (partition_id, rows, min/max key hash). The layout
+replaces JASS v1's four binary files (`source/serialise_jass_v1.h:43-68`):
+`segments/` term-bucket partitioning + parquet min/max stats replace the
+CIvocab.bin binary search (`source/deserialised_jass_v1.h:311-334`);
+`doc_map/` replaces CIdoclist.bin. The reference build itself is
+single-process with no resume (`tools/JASS_index.cpp:270-404`) — at 10^12
+docs checkpointing is the point.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
+import shutil
 import time
+from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jassv2_spark.operators.build import (
-    LARGEST_IMPACT,
-    MAX_TF,
-    SMALLEST_IMPACT,
     BuildConf,
     Index,
-    build_segments,
+    build_index_from_counts,
+    count_terms,
 )
-from jassv2_spark.functions.tokenizer import spark_tokens
 from jassv2_spark.sources.docids import assign_doc_ids
 
 N_TERM_BUCKETS = 64
-STAGES = ["doc_map", "counts", "doc_lengths", "stats", "impacts", "segments", "seg_stats", "term_stats"]
+STAGES = ["doc_map", "counts", "doc_lengths", "segments", "seg_stats", "term_stats"]
+_LINEAGE_SCHEMA = pa.schema(
+    [
+        pa.field("partition_id", pa.int32(), nullable=False),
+        pa.field("rows", pa.int64(), nullable=False),
+        pa.field("min_key_hash", pa.int32()),
+        pa.field("max_key_hash", pa.int32()),
+    ]
+)
 
 
 def _marker_path(out_dir: str, stage: str) -> str:
@@ -95,17 +103,26 @@ def _write_stage(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 
-    # lineage reflects on-disk truth: re-read what was written
+    # lineage reflects on-disk truth: re-read what was written. One scan
+    # brings the per-partition rows to the driver (O(#partitions)); the
+    # driver writes them as the lineage table (the build dir is a
+    # driver-visible path, as the markers and stats.json already require)
+    # and sums them for the marker, so no further Spark job runs.
     written = spark.read.parquet(path)
     key = lineage_key or written.columns[0]
-    lineage = written.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+    parts = written.groupBy(F.spark_partition_id().alias("partition_id")).agg(
         F.count(F.lit(1)).alias("rows"),
         F.min(F.hash(key)).alias("min_key_hash"),
         F.max(F.hash(key)).alias("max_key_hash"),
+    ).collect()
+    lineage_dir = os.path.join(out_dir, "_lineage", stage)
+    shutil.rmtree(lineage_dir, ignore_errors=True)
+    os.makedirs(lineage_dir)
+    pq.write_table(
+        pa.Table.from_pylist([r.asDict() for r in parts], schema=_LINEAGE_SCHEMA),
+        os.path.join(lineage_dir, "part-00000.parquet"),
     )
-    lineage.write.mode("overwrite").parquet(os.path.join(out_dir, "_lineage", stage))
-    rows = written.count()
-    _mark(out_dir, stage, rows, time.perf_counter() - t0, extra)
+    _mark(out_dir, stage, sum(r["rows"] for r in parts), time.perf_counter() - t0, extra)
 
 
 def build_metrics(out_dir: str) -> dict:
@@ -145,7 +162,7 @@ def build_index_persisted(
         if fail_after == stage:
             raise RuntimeError(f"injected failure after stage {stage}")
 
-    # -- stage: doc_map (dense ids) ------------------------------------
+    # -- stage: doc_map (dense ids; text kept for merge_build_dirs) -------
     if not stage_done(out_dir, "doc_map"):
         if doc_id_col is None:
             with_ids = assign_doc_ids(docs, key_col=key_col, out_col="doc_id", num_partitions=nparts)
@@ -158,169 +175,41 @@ def build_index_persisted(
     _chk("doc_map")
     doc_map_full = spark.read.parquet(os.path.join(out_dir, "doc_map"))
 
-    # -- stage: counts (the tokenizer pass) ------------------------------
+    # -- stage: counts (the build's counting pass) -------------------------
     if not stage_done(out_dir, "counts"):
-        tokens = doc_map_full.select(
-            "doc_id", F.explode(spark_tokens("text", mode=conf.tokenizer, xml=True)).alias("term")
-        )
-        counts = tokens.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("cnt"))
+        counts = count_terms(doc_map_full, text_col="text", doc_id_col="doc_id", conf=conf)
         _write_stage(counts, out_dir, "counts", lineage_key="term")
     _chk("counts")
-    counts = spark.read.parquet(os.path.join(out_dir, "counts"))
 
-    # -- stage: doc_lengths ----------------------------------------------
-    if not stage_done(out_dir, "doc_lengths"):
-        _write_stage(
-            counts.groupBy("doc_id").agg(F.sum("cnt").alias("dl")),
-            out_dir, "doc_lengths", lineage_key="doc_id",
+    # -- stages: scoring + index tables (build_index_from_counts) ---------
+    if not all(stage_done(out_dir, s) for s in STAGES[2:]):
+        with open(_marker_path(out_dir, "doc_map")) as f:
+            n_docs = int(json.load(f)["rows"])
+        index = build_index_from_counts(
+            spark.read.parquet(os.path.join(out_dir, "counts")),
+            doc_map_full.select("doc_id", "key"),
+            n_docs,
+            conf=conf,
         )
-    _chk("doc_lengths")
-    doc_lengths = spark.read.parquet(os.path.join(out_dir, "doc_lengths"))
-
-    # -- stage: collection stats -----------------------------------------
-    stats_path = os.path.join(out_dir, "stats.json")
-    if not stage_done(out_dir, "stats"):
-        t0 = time.perf_counter()
-        # one driver action for both scalars (fused round trip — the same
-        # fixed-cost discipline as build_index_from_counts' rollup)
-        row = (
-            doc_map_full.agg(F.count(F.lit(1)).alias("n"))
-            .crossJoin(doc_lengths.agg(F.coalesce(F.sum("dl"), F.lit(0)).alias("clen")))
-            .collect()[0]
-        )
-        n_docs, clen = int(row["n"]), int(row["clen"])
-        stats = {
-            "n_docs": n_docs,
-            "collection_length": int(clen),
-            # Σlen/(slots-1), slot 0 unused ⇒ Σlen/N
-            # (source/ranking_function_atire_bm25.h:65-69)
-            "mean_doc_length": float(clen) / float(n_docs) if n_docs else 0.0,
-            "k1": conf.k1,
-            "b": conf.b,
-            "tokenizer": conf.tokenizer,
-            "stem": conf.stem,
-            "n_term_buckets": N_TERM_BUCKETS,
-        }
-        with open(stats_path, "w") as f:
-            json.dump(stats, f)
-        _mark(out_dir, "stats", 1, time.perf_counter() - t0)
-    _chk("stats")
-    with open(stats_path) as f:
-        stats = json.load(f)
-
-    # -- stage: impacts (BM25 + global min/max + quantize) ----------------
-    if not stage_done(out_dir, "impacts"):
-        t0 = time.perf_counter()
-        scored = _scored_from_counts(spark, counts, doc_lengths, stats, conf).persist()
-        mm = scored.agg(F.min("score").alias("lo"), F.max("score").alias("hi")).collect()[0]
-        lo, hi = float(mm["lo"] or 0.0), float(mm["hi"] or 0.0)
-        stats["min_rsv"], stats["max_rsv"] = lo, hi
-        with open(stats_path, "w") as f:
-            json.dump(stats, f)
-        if hi > lo:
-            impact = (
-                F.floor(
-                    (F.col("score") - F.lit(lo)) / F.lit(hi - lo)
-                    * F.lit(float(LARGEST_IMPACT - SMALLEST_IMPACT))
-                ).cast("int")
-                + F.lit(SMALLEST_IMPACT)
-            )
-        else:
-            impact = F.lit(SMALLEST_IMPACT)
-        _write_stage(
-            scored.select("term", "doc_id", impact.alias("impact")),
-            out_dir, "impacts", lineage_key="term",
-        )
-        scored.unpersist()
-    _chk("impacts")
-    impacts = spark.read.parquet(os.path.join(out_dir, "impacts"))
-
-    # -- stage: segments (term-bucket-partitioned) ------------------------
-    if not stage_done(out_dir, "segments"):
-        seg_df = impacts.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        segments = build_segments(
-            impacts.join(seg_df, "term"), int(stats["n_docs"]), conf.shard_size
-        ).withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
-        )
-        _write_stage(
-            segments, out_dir, "segments", partition_by=["term_bucket"], lineage_key="term"
-        )
-    _chk("segments")
-    segments = spark.read.parquet(os.path.join(out_dir, "segments"))
-
-    # -- stages: vocab metadata -------------------------------------------
-    if not stage_done(out_dir, "seg_stats"):
-        _write_stage(
-            segments.groupBy("term", "impact").agg(F.sum("part_freq").alias("seg_freq")),
-            out_dir, "seg_stats", lineage_key="term",
-        )
-    _chk("seg_stats")
-    if not stage_done(out_dir, "term_stats"):
-        seg_stats = spark.read.parquet(os.path.join(out_dir, "seg_stats"))
-        _write_stage(
-            seg_stats.groupBy("term").agg(
-                F.sum("seg_freq").alias("df"),
-                F.max("impact").alias("max_impact"),
-                F.count(F.lit(1)).alias("n_segments"),
-            ),
-            out_dir, "term_stats", lineage_key="term",
-        )
-    _chk("term_stats")
+        try:
+            _write_index_tables(index, out_dir, resume=True, after=_chk)
+        finally:
+            index.unpersist()
 
     return load_index_tables(spark, out_dir, conf=conf)
 
 
-def _scored_from_counts(
-    spark: SparkSession, counts: DataFrame, doc_lengths: DataFrame, stats: dict, conf: BuildConf
-) -> DataFrame:
-    """ATIRE BM25 from checkpointed counts (same math as operators/build)."""
-    n, mean = stats["n_docs"], stats["mean_doc_length"]
-    tf = counts.select(
-        "doc_id", "term", F.least(F.col("cnt"), F.lit(MAX_TF)).cast("long").alias("tf")
-    )
-    term_df = counts.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    df_vals = [r[0] for r in term_df.select("df").distinct().collect()]
-    idf_map = F.broadcast(
-        spark.createDataFrame([(int(d), math.log(n / d)) for d in df_vals], "df long, idf double")
-    )
-    k1, b = float(conf.k1), float(conf.b)
-    tf_d = F.col("tf").cast("double")
-    lc = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl").cast("double") / F.lit(mean))
-    return (
-        tf.join(doc_lengths, "doc_id")
-        .join(term_df, "term")
-        .join(idf_map, "df")
-        .withColumn("score", F.col("idf") * ((tf_d * F.lit(k1 + 1.0)) / (tf_d + lc)))
-    )
-
-
-def save_index_tables(index: Index, out_dir: str, codec: str | None = None) -> None:
-    """One-shot save of an in-memory Index (checkpoint markers included so
-    the result is loadable and further builds skip everything).
-
-    `codec`: None stores `doc_ids` as a raw array<long> (parquet's own
-    dictionary/RLE/zstd applies — the default); 'vbyte' or 'qmx' stores
-    delta+codec BinaryType, the JASS-v1-style layout
-    (`source/serialise_jass_v1.cpp:114-170` d1 + codec encode)."""
-    os.makedirs(out_dir, exist_ok=True)
-    doc_map_full = index.doc_map.withColumn("text", F.lit(None).cast("string"))
-    _write_stage(doc_map_full, out_dir, "doc_map", lineage_key="doc_id")
-    _write_stage(index.doc_lengths, out_dir, "doc_lengths", lineage_key="doc_id")
-    segments = index.segments
-    if codec is not None:
-        from jassv2_spark.functions.compression import make_encode_udf
-
-        segments = segments.select(
-            "term", "impact", "min_doc", "part_freq",
-            make_encode_udf(codec)(F.col("doc_ids")).alias("doc_ids_enc"),
-        )
-    segments = segments.withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
-    )
-    _write_stage(segments, out_dir, "segments", partition_by=["term_bucket"], lineage_key="term")
-    _write_stage(index.seg_stats, out_dir, "seg_stats", lineage_key="term")
-    _write_stage(index.term_stats, out_dir, "term_stats", lineage_key="term")
+def _write_index_tables(
+    index: Index,
+    out_dir: str,
+    codec: str | None = None,
+    *,
+    resume: bool = False,
+    after: Callable[[str], None] = lambda stage: None,
+) -> None:
+    """stats.json, then the doc_lengths, segments, seg_stats and term_stats
+    stages. ``resume`` skips stages whose markers already exist; ``after``
+    runs once each stage is complete."""
     with open(os.path.join(out_dir, "stats.json"), "w") as f:
         json.dump(
             {
@@ -340,6 +229,41 @@ def save_index_tables(index: Index, out_dir: str, codec: str | None = None) -> N
             },
             f,
         )
+
+    segments = index.segments
+    if codec is not None:
+        from jassv2_spark.functions.compression import make_encode_udf
+
+        segments = segments.select(
+            "term", "impact", "min_doc", "part_freq",
+            make_encode_udf(codec)(F.col("doc_ids")).alias("doc_ids_enc"),
+        )
+    segments = segments.withColumn(
+        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
+    )
+    for stage, frame, partition_by, key in (
+        ("doc_lengths", index.doc_lengths, None, "doc_id"),
+        ("segments", segments, ["term_bucket"], "term"),
+        ("seg_stats", index.seg_stats, None, "term"),
+        ("term_stats", index.term_stats, None, "term"),
+    ):
+        if not (resume and stage_done(out_dir, stage)):
+            _write_stage(frame, out_dir, stage, partition_by=partition_by, lineage_key=key)
+        after(stage)
+
+
+def save_index_tables(index: Index, out_dir: str, codec: str | None = None) -> None:
+    """One-shot save of an in-memory Index (checkpoint markers included so
+    the result is loadable and further builds skip everything).
+
+    `codec`: None stores `doc_ids` as a raw array<long> (parquet's own
+    dictionary/RLE/zstd applies — the default); 'vbyte' or 'qmx' stores
+    delta+codec BinaryType, the JASS-v1-style layout
+    (`source/serialise_jass_v1.cpp:114-170` d1 + codec encode)."""
+    os.makedirs(out_dir, exist_ok=True)
+    doc_map_full = index.doc_map.withColumn("text", F.lit(None).cast("string"))
+    _write_stage(doc_map_full, out_dir, "doc_map", lineage_key="doc_id")
+    _write_index_tables(index, out_dir, codec)
 
 
 def load_index_tables(spark: SparkSession, out_dir: str, conf: BuildConf | None = None) -> Index:

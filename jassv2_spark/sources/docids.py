@@ -8,7 +8,8 @@ and reproducible at any parallelism.
 Scale note (10^12 docs): a single global ``row_number()`` window is a
 one-partition sort bottleneck, so the default path is **two-phase**:
 ``repartitionByRange(key)`` (sampled range boundaries — heavy keys spread,
-light keys stay local) → per-partition counts collected to the driver (tiny:
+light keys stay local; materialised once with ``localCheckpoint`` so both
+phases read the same partitions) → per-partition counts collected to the driver (tiny:
 one long per partition) → broadcast prefix offsets → partition-local ranks
 via a sorted mapInPandas. No global shuffle beyond the range partitioning
 the downstream stages want anyway.
@@ -30,11 +31,21 @@ def assign_doc_ids(
     out_col: str = "doc_id",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Add dense 1-based ``out_col`` ordered by ``key_col`` (two-phase)."""
+    """Add dense 1-based ``out_col`` ordered by ``key_col`` (two-phase).
+
+    An existing ``out_col`` is replaced in place, never duplicated."""
     spark = df.sparkSession
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(num_partitions, F.col(key_col)).sortWithinPartitions(key_col)
-    ranged = ranged.withColumn("__pid", F.spark_partition_id())
+    # ONE materialised range partitioning feeds both phases: each
+    # evaluation of repartitionByRange re-samples its boundaries, so a
+    # count pass and a numbering pass over the lazy plan would disagree on
+    # which rows each partition holds (duplicate, out-of-order ids).
+    ranged = (
+        df.repartitionByRange(num_partitions, F.col(key_col))
+        .sortWithinPartitions(key_col)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
     # Tiny driver-side collect: one count per partition.
     counts = {
         r["__pid"]: r["cnt"]
@@ -47,7 +58,11 @@ def assign_doc_ids(
         running += counts[pid]
     boffsets = spark.sparkContext.broadcast(offsets)
 
-    schema = StructType(ranged.schema.fields + [StructField(out_col, LongType(), False)])
+    id_field = StructField(out_col, LongType(), False)
+    fields = [id_field if f.name == out_col else f for f in ranged.schema.fields]
+    if out_col not in ranged.columns:
+        fields.append(id_field)
+    schema = StructType(fields)
 
     def add_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         local = 0

@@ -23,8 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from jassv2_spark.functions.tokenizer import spark_tokens
-from jassv2_spark.operators.build import BuildConf
+from jassv2_spark.operators.build import BuildConf, count_terms
 
 
 def ingest_stream(
@@ -39,22 +38,20 @@ def ingest_stream(
     """Start a streaming query appending per-batch (doc_id, term, cnt) rows
     to <out>/counts_stream and (doc_id, dl) to <out>/doc_lengths_stream.
 
-    Each micro-batch is tokenized with the same vectorized tokenizer as the
-    batch build; counts are additive across batches because each document
-    arrives exactly once (dedupe upstream via dedup.exact_duplicates)."""
+    Each micro-batch runs the batch build's counting pass
+    (operators/build.py:count_terms); counts are additive across batches
+    because each document arrives exactly once (dedupe upstream via
+    dedup.exact_duplicates)."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        counts = (
-            batch_df.select(
-                F.col(doc_id_col).cast("long").alias("doc_id"),
-                F.explode(spark_tokens(text_col, mode=tokenizer, xml=True)).alias("term"),
-            )
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("batch_id", F.lit(batch_id))
+        counts = count_terms(
+            batch_df, text_col=text_col, doc_id_col=doc_id_col,
+            conf=BuildConf(tokenizer=tokenizer),
+        ).withColumn("batch_id", F.lit(batch_id))
+        counts.select("doc_id", "term", "cnt", "batch_id").write.mode("append").parquet(
+            os.path.join(out_dir, "counts_stream")
         )
-        counts.write.mode("append").parquet(os.path.join(out_dir, "counts_stream"))
-        counts.groupBy("doc_id", "batch_id").agg(F.sum("cnt").alias("dl")).write.mode(
+        counts.groupBy("doc_id", "batch_id").agg(F.max("dl").alias("dl")).write.mode(
             "append"
         ).parquet(os.path.join(out_dir, "doc_lengths_stream"))
 
@@ -73,8 +70,8 @@ def finalize(spark: SparkSession, out_dir: str, conf: BuildConf | None = None):
 
     Feeds the snapshot into the checkpointed batch pipeline
     (plans/persist.py) as its pre-built "counts"/"doc_map" stages, so every
-    downstream stage (stats → impacts → segments → vocab metadata) is the
-    SAME code the batch build runs. Rerunnable; each finalize rebuilds the
+    downstream stage (doc lengths → scoring → segments → vocab metadata) is
+    the SAME code the batch build runs. Rerunnable; each finalize rebuilds the
     snapshot's quantization (global min/max must see everything)."""
     import shutil
 

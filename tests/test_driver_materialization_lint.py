@@ -67,8 +67,7 @@ ALLOWED = {
     ("mlt.py", "mlt_query_terms", "collect"): "query-bounded",
     ("mlt.py", "related_doc_pairs", "collect"): "query-bounded",
     ("percolate.py", "percolate", "collect"): "query-bounded",  # stored queries
-    ("persist.py", "_scored_from_counts", "collect"): "vocab-bounded",
-    ("persist.py", "build_index_persisted", "collect"): "scalar",
+    ("persist.py", "_write_stage", "collect"): "scalar",  # per-partition lineage
     ("phrase.py", "_bm25_pseudo_term_topk", "collect"): "scalar",
     ("qpp.py", "qpp_features", "collect"): "query-bounded",
     ("saat.py", "package_index", "toPandas"): "scalar",  # per-bucket stats

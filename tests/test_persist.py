@@ -2,11 +2,12 @@
 
 import json
 import os
+import random
 
 import pytest
 
 from jassv2_spark.fixtures import synthetic_corpus, synthetic_queries
-from jassv2_spark.operators.build import build_index
+from jassv2_spark.operators.build import BuildConf, build_index, count_terms
 from jassv2_spark.operators.search import search
 from jassv2_spark.plans.persist import (
     STAGES,
@@ -42,7 +43,7 @@ def test_persisted_build_equals_in_memory(spark, docs, tmp_path):
     assert (idx_p.min_rsv, idx_p.max_rsv) == (idx_m.min_rsv, idx_m.max_rsv)
 
 
-@pytest.mark.parametrize("fail_stage", ["counts", "stats", "impacts", "segments"])
+@pytest.mark.parametrize("fail_stage", STAGES)
 def test_resume_after_injected_failure(spark, docs, tmp_path, fail_stage):
     out = str(tmp_path / f"idx_{fail_stage}")
     with pytest.raises(RuntimeError, match="injected failure"):
@@ -68,6 +69,87 @@ def test_resume_after_injected_failure(spark, docs, tmp_path, fail_stage):
     idx_m = build_index(docs, text_col="text", key_col="url", cache=False)
     queries = synthetic_queries(5)
     assert _results(idx, spark, queries) == _results(idx_m, spark, queries)
+
+
+# inflected forms, so a build that skips stemming shows in its vocabulary
+_STEM_WORDS = [
+    "running", "runs", "run", "jumping", "jumped", "connection", "connected",
+    "ponies", "caresses", "relational", "happily", "the", "a", "2024", "x1",
+]
+
+
+@pytest.fixture(scope="module")
+def stem_docs(spark):
+    rng = random.Random(7)
+    rows = [
+        (f"https://example.org/{i:03d}",
+         " ".join(rng.choice(_STEM_WORDS) for _ in range(rng.randint(3, 25))))
+        for i in range(40)
+    ]
+    return spark.createDataFrame(rows, ["url", "text"])
+
+
+def _tables(idx):
+    def rows(df, *cols):
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    return {
+        "segments": rows(idx.segments, "term", "impact", "min_doc", "part_freq", "doc_ids"),
+        "seg_stats": rows(idx.seg_stats, "term", "impact", "seg_freq"),
+        "term_stats": rows(idx.term_stats, "term", "df", "max_impact", "n_segments"),
+        "doc_lengths": rows(idx.doc_lengths, "doc_id", "dl"),
+        "scalars": (idx.n_docs, idx.collection_length, idx.min_rsv, idx.max_rsv),
+    }
+
+
+@pytest.mark.parametrize("stem", [False, True])
+@pytest.mark.parametrize("tokenizer", ["parity", "ascii"])
+def test_staged_build_matches_build_index(spark, stem_docs, tmp_path, tokenizer, stem):
+    conf = BuildConf(tokenizer=tokenizer, stem=stem)
+    kw = dict(text_col="text", key_col="url", conf=conf)
+    want = _tables(build_index(stem_docs, **kw))
+    terms = {t for t, *_ in want["term_stats"]}
+    assert ("running" in terms) != stem and ("run" in terms)
+
+    clean = build_index_persisted(stem_docs, str(tmp_path / "clean"), **kw)
+    assert _tables(clean) == want
+
+    # killed after every stage in turn, each run resuming the last
+    out = str(tmp_path / "resumed")
+    for stage in STAGES:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            build_index_persisted(stem_docs, out, fail_after=stage, **kw)
+    assert _tables(build_index_persisted(stem_docs, out, **kw)) == want
+
+    # the stop-list build is the same pipeline: stemming applies to it too
+    assert _tables(build_index(stem_docs, stop_terms=[], **kw))["term_stats"] == (
+        want["term_stats"]
+    )
+    stopped = _tables(build_index(stem_docs, stop_terms=["the"], **kw))
+    assert {t for t, *_ in stopped["term_stats"]} == terms - {"the"}
+
+
+def test_counts_stage_is_one_fused_pass(spark, docs, tmp_path, monkeypatch):
+    """The staged build's counts stage is the map-only counting kernel: no
+    token explode and no (doc_id, term) aggregation exchange."""
+    from jassv2_spark.plans import persist
+
+    plans = []
+
+    def spy(*args, **kwargs):
+        counts = count_terms(*args, **kwargs)
+        plans.append(counts._jdf.queryExecution().executedPlan().toString())
+        return counts
+
+    monkeypatch.setattr(persist, "count_terms", spy)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_index_persisted(
+            docs, str(tmp_path / "idx"), text_col="text", key_col="url", fail_after="counts"
+        )
+    (plan,) = plans
+    assert "MapInPandas" in plan
+    assert "Generate" not in plan and "explode" not in plan
+    assert "Aggregate" not in plan
 
 
 def test_lineage_rows_cover_stage(spark, docs, tmp_path):

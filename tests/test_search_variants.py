@@ -119,8 +119,6 @@ def test_stopped_build_differs_from_serve_time_drop(spark):
     """Index-time stopping shifts dl/avg_dl: ranking over the surviving
     terms is NOT the same as serving the full index without the stop
     terms — and a stopped query term behaves as ordinary OOV."""
-    from jassv2_spark.operators.build import build_index_stopped
-
     docs = spark.createDataFrame(
         [
             (1, "the the the spark join"),
@@ -129,9 +127,9 @@ def test_stopped_build_differs_from_serve_time_drop(spark):
         ],
         ["doc_id", "text"],
     )
-    sidx = build_index_stopped(
-        docs, ["the"], text_col="text", key_col="doc_id", doc_id_col="doc_id",
-        conf=BuildConf(tokenizer="parity"),
+    sidx = build_index(
+        docs, text_col="text", key_col="doc_id", doc_id_col="doc_id",
+        conf=BuildConf(tokenizer="parity"), stop_terms=["the"],
     )
     # 'the' is gone from the vocabulary
     assert sidx.term_stats.where("term = 'the'").count() == 0
@@ -154,14 +152,12 @@ def test_stopped_build_differs_from_serve_time_drop(spark):
 
 
 def test_stopped_build_empty_doc_keeps_docid(spark):
-    from jassv2_spark.operators.build import build_index_stopped
-
     docs = spark.createDataFrame(
         [(1, "the the"), (2, "spark")], ["doc_id", "text"]
     )
-    sidx = build_index_stopped(
-        docs, ["the"], text_col="text", key_col="doc_id", doc_id_col="doc_id",
-        conf=BuildConf(tokenizer="parity"),
+    sidx = build_index(
+        docs, text_col="text", key_col="doc_id", doc_id_col="doc_id",
+        conf=BuildConf(tokenizer="parity"), stop_terms=["the"],
     )
     assert sidx.n_docs == 2                       # emptied doc still counted
     assert sidx.doc_map.count() == 2

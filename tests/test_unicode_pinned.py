@@ -57,7 +57,7 @@ def test_ascii_block_identical_to_runtime():
             assert fold(ch) == ch.lower()
 
 
-def test_tokenizer_goldens_unchanged_under_pinned_tables(spark):
+def test_tokenizer_goldens_unchanged_under_pinned_tables():
     """parser.cpp::unittest-style goldens must be identical in both modes
     on the test corpora (the divergences live in exotic codepoints)."""
     cases = [
