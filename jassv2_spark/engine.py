@@ -123,11 +123,12 @@ class Engine:
     # -- serving -------------------------------------------------------
     def search(self, queries: DataFrame, k: int | None = None) -> DataFrame:
         if self.oracle is not None:
-            from jassv2_spark.operators.wand import search_with_rsv_oracle
+            from jassv2_spark.operators.wand import _search_with_oracle
 
-            return search_with_rsv_oracle(
+            return _search_with_oracle(
                 self.index, queries, self.oracle, k=k or self.top_k, rho=self.rho,
-                tokenizer=self.query_tokenizer, min_postings=self.postings_min,
+                postings_budget=self.postings_budget, tokenizer=self.query_tokenizer,
+                min_postings=self.postings_min, with_keys=True,
             )
         return search(
             self.index,

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from jassv2_spark.operators.build import Index
-from jassv2_spark.operators.search import parse_queries
+from jassv2_spark.operators.search import _query_conf, parse_queries
 
 SCALE = 1_000_000
 
@@ -52,10 +52,7 @@ def cache_admission(
     q_tf); admitted is 1 while the running df total under the
     density order (score_micros DESC, term ASC) stays ≤ the budget.
     """
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, _ = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
     qtf = q_terms.groupBy("term").agg(F.sum("q_tf").cast("long").alias("qtf"))
     t = qtf.join(F.broadcast(index.term_stats.select("term", "df")), "term")
     scored = t.withColumn(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from jassv2_spark.operators.build import Index
 from jassv2_spark.operators.search import (
     _accumulate_hits,
+    _query_conf,
     gather_segments,
     parse_queries,
 )
@@ -50,10 +51,7 @@ def facet_counts(
 
     `doc_facets` carries (doc_id, <facet_col>); rows per doc_id must be
     unique (a doc belongs to one bucket per facet dimension)."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg)
     joined = hits.join(

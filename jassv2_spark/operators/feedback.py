@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from jassv2_spark.operators.build import Index
 from jassv2_spark.operators.search import (
     DEFAULT_K,
+    _query_conf,
     parse_queries,
     search,
     search_from_terms,
@@ -61,9 +62,7 @@ def rm3_expansion_terms(
         .groupBy("query_id", "term")
         .agg(F.sum(F.col("tf") * F.col("rsv")).cast("long").alias("exp_score"))
     )
-    q_terms, _ = parse_queries(
-        queries, tokenizer=index.conf.tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, _ = parse_queries(queries, *_query_conf(index))
     novel = scores.join(
         F.broadcast(q_terms.select("query_id", "term")), ["query_id", "term"], "left_anti"
     )
@@ -93,9 +92,7 @@ def rm3_search(
     exp = rm3_expansion_terms(
         index, queries, fb_docs=fb_docs, fb_terms=fb_terms, rho=rho
     )
-    q_terms, _ = parse_queries(
-        queries, tokenizer=index.conf.tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, _ = parse_queries(queries, *_query_conf(index))
     qt2 = q_terms.unionByName(
         exp.select("query_id", "term", F.lit(1).cast("long").alias("q_tf"))
     )
@@ -168,9 +165,7 @@ def rocchio_search(
     exp = rocchio_centroid_terms(
         index, queries, fb_docs=fb_docs, fb_terms=fb_terms, rho=rho
     )
-    q_terms, _ = parse_queries(
-        queries, tokenizer=index.conf.tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, _ = parse_queries(queries, *_query_conf(index))
     qt2 = (
         q_terms.select(
             "query_id", "term", (F.col("q_tf") * F.lit(int(alpha))).alias("w")

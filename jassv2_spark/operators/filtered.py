@@ -30,7 +30,7 @@ negated terms' postings (term-pruned scan, same as the positive side).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jassv2_spark.functions.tokenizer import spark_tokens
@@ -38,22 +38,11 @@ from jassv2_spark.operators.build import Index
 from jassv2_spark.operators.search import (
     DEFAULT_K,
     _accumulate_hits,
+    _query_conf,
+    _rank_topk,
     gather_segments,
     parse_queries,
 )
-
-
-def _topk(index: Index, hits: DataFrame, k: int, with_keys: bool) -> DataFrame:
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("rsv").desc(), F.col("doc_id").desc()
-    )
-    topk = hits.withColumn("rank", F.row_number().over(wk)).where(
-        F.col("rank") <= F.lit(k)
-    )
-    if with_keys:
-        topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select("query_id", "doc_id", "key", "rsv", "rank")
-    return topk.select("query_id", "doc_id", "rsv", "rank")
 
 
 def search_filtered(
@@ -67,15 +56,12 @@ def search_filtered(
 ) -> DataFrame:
     """Top-k restricted to `allowed_docs` (a (doc_id, ...) DataFrame);
     rsv unchanged, ranks within the filtered set."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg).join(
         allowed_docs.select("doc_id"), "doc_id", "left_semi"
     )
-    return _topk(index, hits, k, with_keys)
+    return _rank_topk(index, hits, k, with_keys)
 
 
 def parse_negated_queries(
@@ -121,10 +107,7 @@ def search_negated(
 ) -> DataFrame:
     """Top-k with '-term' exclusion: a doc containing ANY negated term is
     removed from that query's results."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta, q_neg = parse_negated_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta, q_neg = parse_negated_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg)
     excluded = (
@@ -134,4 +117,4 @@ def search_negated(
         .distinct()
     )
     hits = hits.join(excluded, ["query_id", "doc_id"], "left_anti")
-    return _topk(index, hits, k, with_keys)
+    return _rank_topk(index, hits, k, with_keys)

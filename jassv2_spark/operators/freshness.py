@@ -24,13 +24,15 @@ broadcast — no driver hop, no skew.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jassv2_spark.operators.build import Index
 from jassv2_spark.operators.search import (
     DEFAULT_K,
     _accumulate_hits,
+    _query_conf,
+    _rank_topk,
     gather_segments,
     parse_queries,
 )
@@ -54,10 +56,7 @@ def search_fresh(
     fresh_micros, rank). `doc_ts` maps doc_id → timestamp (e.g. warc_ts);
     age is measured from the corpus' newest timestamp, so the ranking is
     a pure function of the inputs (no wall clock)."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg)
     ts = doc_ts.select(
@@ -80,14 +79,6 @@ def search_fresh(
             .cast("long"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("fresh_micros").desc(), F.col("doc_id").desc()
-    )
-    topk = aged.withColumn("rank", F.row_number().over(w).cast("long")).where(
-        F.col("rank") <= F.lit(int(k))
-    )
-    cols = ["query_id", "doc_id", "rsv", "fresh_micros", "rank"]
-    if with_keys:
-        topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select(*cols[:2], "key", *cols[2:])
-    return topk.select(*cols)
+    return _rank_topk(
+        index, aged, int(k), with_keys, score="fresh_micros", cols=("rsv", "fresh_micros")
+    ).withColumn("rank", F.col("rank").cast("long"))

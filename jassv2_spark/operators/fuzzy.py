@@ -31,7 +31,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from jassv2_spark.operators.build import Index
-from jassv2_spark.operators.search import DEFAULT_K, parse_queries, search_from_terms
+from jassv2_spark.operators.search import (
+    DEFAULT_K,
+    _query_conf,
+    parse_queries,
+    search_from_terms,
+)
 
 N_CANDIDATES_DEFAULT = 5
 
@@ -121,9 +126,7 @@ def search_fuzzy(
     """Anytime top-k with OOV query terms spell-corrected (distance ≤ 1)
     before the ordinary segment pipeline. In-vocabulary terms are served
     exactly as typed — corrections never override the user."""
-    q_terms, _ = parse_queries(
-        queries, tokenizer=index.conf.tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, _ = parse_queries(queries, *_query_conf(index))
     qt2 = correct_query_terms(index, q_terms)
     qm2 = qt2.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
     return search_from_terms(index, qt2, qm2, k=k, rho=rho, with_keys=with_keys)
@@ -154,10 +157,7 @@ def search_synonyms(
     Scale shape: the synonym table is a broadcast probe of the tiny
     parsed-terms set; everything downstream is the ordinary serve path
     (costs and pruning unchanged, just more terms)."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, _ = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
     syn = F.broadcast(synonyms.select("term", "synonym"))
     extra = q_terms.join(syn, "term").select(
         "query_id", F.col("synonym").alias("term"), "q_tf"
@@ -279,10 +279,7 @@ def search_prefix(
     Scale shape: expansion is :func:`prefix_term_expansions`'s broadcast
     nested-loop probe over ONE vocabulary scan; everything downstream is
     the unchanged serve chain (segment pruning, ρ, top-k)."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, _ = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
     long_terms = q_terms.where(F.length("term") >= F.lit(int(min_prefix)))
     cand = prefix_term_expansions(
         index.term_stats,

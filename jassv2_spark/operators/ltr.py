@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from jassv2_spark.operators.build import Index
-from jassv2_spark.operators.search import DEFAULT_K, parse_queries, search
+from jassv2_spark.operators.search import DEFAULT_K, _query_conf, parse_queries, search
 
 MICRO = 1_000_000
 
@@ -52,14 +52,11 @@ def ltr_features(
     """One row per (query_id, doc_id) in the anytime top-k, with the
     integer feature columns documented in the module docstring."""
     spark = index.spark
-    tokenizer = tokenizer or index.conf.tokenizer
     topk = search(
         index, queries, k=k, rho=rho, tokenizer=tokenizer, with_keys=False
     ).select("query_id", "doc_id", "rsv", "rank")
 
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
 
     # matched postings: query terms × index postings, restricted to the
     # candidate docs (broadcast both tiny sides).

@@ -41,6 +41,7 @@ from jassv2_spark.operators.build import Index
 from jassv2_spark.operators.search import (
     DEFAULT_K,
     _accumulate_hits,
+    _rank_topk,
     gather_segments,
 )
 
@@ -106,16 +107,7 @@ def more_like_this(
     hits = _accumulate_hits(index, q_terms, seg).join(
         F.broadcast(seed_map), "query_id"
     ).where(F.col("doc_id") != F.col("seed"))
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("rsv").desc(), F.col("doc_id").desc()
-    )
-    topk = hits.withColumn("rank", F.row_number().over(wk)).where(
-        F.col("rank") <= F.lit(k)
-    )
-    if with_keys:
-        topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select("query_id", "doc_id", "key", "rsv", "rank")
-    return topk.select("query_id", "doc_id", "rsv", "rank")
+    return _rank_topk(index, hits, k, with_keys)
 
 
 def doc_keyterms(index: Index, m: int = 5) -> DataFrame:

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from jassv2_spark.functions.tokenizer import spark_tokens
 from jassv2_spark.operators.build import Index
-from jassv2_spark.operators.search import parse_queries
+from jassv2_spark.operators.search import _query_conf, parse_queries
 
 MICRO = 1_000_000
 
@@ -56,10 +56,8 @@ def percolate(
     """(doc_id, query_id, score_micros, n_matched, n_terms, q_rank):
     for each incoming doc, its top-m registered queries."""
     spark = index.spark
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        registered, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    tokenizer, stem = _query_conf(index, tokenizer)
+    q_terms, q_meta = parse_queries(registered, tokenizer, stem)
 
     # idf lookup from the BASE index vocabulary, restricted to registered
     # terms (tiny), ln driver-side per distinct df.
@@ -79,7 +77,7 @@ def percolate(
     )
 
     tok = spark_tokens(text_col, mode=tokenizer, xml=False)
-    if getattr(index.conf, "stem", False):
+    if stem:
         from jassv2_spark.functions.stem import spark_stem
 
         tok = spark_stem(tok)

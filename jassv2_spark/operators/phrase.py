@@ -403,16 +403,15 @@ def sdm_topk(
     on the hits. Single-term queries have no bigrams and reduce to
     w_T·rsv with identical ranks to `search`."""
     from jassv2_spark.operators.search import (
-        DEFAULT_K,
         _accumulate_hits,
+        _query_conf,
+        _rank_topk,
         gather_segments,
         parse_queries,
     )
 
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    tokenizer, stem = _query_conf(index, tokenizer)
+    q_terms, q_meta = parse_queries(queries, tokenizer, stem)
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg)
 
@@ -459,14 +458,6 @@ def sdm_topk(
             ).cast("long"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("blend").desc(), F.col("doc_id").desc()
-    )
-    topk = blended.withColumn("rank", F.row_number().over(w).cast("long")).where(
-        F.col("rank") <= F.lit(int(k))
-    )
-    cols = ["query_id", "doc_id", "rsv", "otf", "utf", "blend", "rank"]
-    if with_keys:
-        topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select(*cols[:2], "key", *cols[2:])
-    return topk.select(*cols)
+    return _rank_topk(
+        index, blended, int(k), with_keys, score="blend", cols=("rsv", "otf", "utf", "blend")
+    ).withColumn("rank", F.col("rank").cast("long"))

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jassv2_spark.operators.build import Index
-from jassv2_spark.operators.search import parse_queries
+from jassv2_spark.operators.search import _query_conf, parse_queries
 
 MICRO = 1_000_000
 
@@ -47,10 +47,7 @@ def qpp_features(
     """(query_id, n_terms, n_vocab, sum_idf_micros, max_idf_micros,
     sum_scq_micros, max_scq_micros, scope_ppm) — all exact integers."""
     spark = index.spark
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
 
     ctf = (
         index.postings.join(

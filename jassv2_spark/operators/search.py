@@ -41,9 +41,7 @@ vocabulary binary search (`source/deserialised_jass_v1.h:311-334`).
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from jassv2_spark.functions.tokenizer import spark_tokens
@@ -70,6 +68,13 @@ def parse_queries(
     q_terms = toks.groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("q_tf"))
     q_meta = q_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
     return q_terms, q_meta
+
+
+def _query_conf(index: Index, tokenizer: str | None = None) -> tuple[str, bool]:
+    """(tokenizer, stem) for parsing queries against `index`: the caller's
+    tokenizer or else the index's, and always the index's stem setting, so
+    query terms land in the build's vocabulary."""
+    return tokenizer or index.conf.tokenizer, getattr(index.conf, "stem", False)
 
 
 def gather_segments(
@@ -140,10 +145,7 @@ def search(
     """Batch top-k search. Returns (query_id, doc_id[, key], rsv, rank).
     Large candidate sets auto-route through the row-identical doc-sharded
     ranking plan (see search_from_terms)."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     return search_from_terms(
         index, q_terms, q_meta, k=k, rho=rho,
         postings_budget=postings_budget, with_keys=with_keys,
@@ -160,12 +162,21 @@ AUTO_SHARD_N = 32
 
 
 def _rank_topk(
-    index: Index, hits: DataFrame, k: int, with_keys: bool, n_shards: int | None
+    index: Index,
+    hits: DataFrame,
+    k: int,
+    with_keys: bool,
+    *,
+    score: str = "rsv",
+    cols: tuple[str, ...] = ("rsv",),
+    n_shards: int | None = None,
 ) -> DataFrame:
-    """Shared top-k epilogue: single-window ranking, or the two-stage
-    doc-sharded plan when ``n_shards`` is set (row-identical; proof in
-    search_sharded's docstring)."""
-    order = [F.col("rsv").desc(), F.col("doc_id").desc()]
+    """The serve skeleton's top-k epilogue: rank each query's `hits` by
+    (`score` DESC, doc_id DESC), keep rank ≤ k and, with keys, join the
+    document keys. Returns (query_id, doc_id[, key], *cols, rank). With
+    ``n_shards`` the ranking runs as the two-stage doc-sharded plan
+    (row-identical; proof in search_sharded's docstring)."""
+    order = [F.col(score).desc(), F.col("doc_id").desc()]
     if n_shards is not None:
         sharded = hits.withColumn("shard", F.pmod(F.col("doc_id"), F.lit(int(n_shards))))
         w_local = Window.partitionBy("query_id", "shard").orderBy(*order)
@@ -178,8 +189,59 @@ def _rank_topk(
         # topk is tiny (≤ queries × k): broadcast it into the big doc_map,
         # never the reverse (doc_map is N rows).
         topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select("query_id", "doc_id", "key", "rsv", "rank")
-    return topk.select("query_id", "doc_id", "rsv", "rank")
+        return topk.select("query_id", "doc_id", "key", *cols, "rank")
+    return topk.select("query_id", "doc_id", *cols, "rank")
+
+
+def _auto_shards(
+    index: Index, q_terms: DataFrame, auto_shard_threshold: int | None = None
+) -> int | None:
+    """The shard count for `_rank_topk`: AUTO_SHARD_N when some query may
+    process more than the threshold's postings, else None (one window).
+    See search_from_terms for the threshold's meaning."""
+    threshold = AUTO_SHARD_THRESHOLD if auto_shard_threshold is None else int(auto_shard_threshold)
+    if threshold <= 0:
+        return AUTO_SHARD_N
+    if not (index.n_docs and index.n_docs > threshold):
+        return None
+    # only now can any single query's candidate set exceed the threshold —
+    # pay one metadata-sized probe to find out. The probe joins the (tiny)
+    # query terms against the PERSISTED term_stats df column, never
+    # re-walking the segment gather: Σ df per query is an upper bound on
+    # processed postings (ρ/budget/segment filters only shrink it), so the
+    # only possible error is sharding a query that didn't strictly need
+    # it — row-identical either way.
+    est = (
+        F.broadcast(q_terms.select("query_id", "term"))
+        .join(index.term_stats.select("term", "df"), "term")
+        .groupBy("query_id")
+        .agg(F.sum("df").alias("p"))
+        .agg(F.max("p").alias("m"))
+        .collect()[0]["m"]
+    )
+    return AUTO_SHARD_N if est and int(est) > threshold else None
+
+
+def _serve(
+    index: Index,
+    q_terms: DataFrame,
+    q_meta: DataFrame,
+    *,
+    k: int,
+    rho: float,
+    postings_budget: int | None,
+    with_keys: bool,
+    n_shards: int | None,
+    seg_filter=None,
+) -> DataFrame:
+    """The serve skeleton from parsed terms: gather_segments → optional
+    `seg_filter` (a function from the processed-segment set to a subset
+    of it, e.g. WAND's prune_segments) → accumulate → top-k epilogue."""
+    seg = gather_segments(index, q_terms, q_meta, rho=rho, postings_budget=postings_budget)
+    if seg_filter is not None:
+        seg = seg_filter(seg)
+    hits = _accumulate_hits(index, q_terms, seg)
+    return _rank_topk(index, hits, k, with_keys, n_shards=n_shards)
 
 
 def search_from_terms(
@@ -207,43 +269,40 @@ def search_from_terms(
     so small-corpus serves pay nothing. Pass 0 to force sharding, a huge
     value to force the single-window plan.
     """
-    seg = gather_segments(index, q_terms, q_meta, rho=rho, postings_budget=postings_budget)
+    return _serve(
+        index, q_terms, q_meta, k=k, rho=rho, postings_budget=postings_budget,
+        with_keys=with_keys, n_shards=_auto_shards(index, q_terms, auto_shard_threshold),
+    )
 
-    threshold = AUTO_SHARD_THRESHOLD if auto_shard_threshold is None else int(auto_shard_threshold)
-    n_shards = None
-    if threshold <= 0:
-        n_shards = AUTO_SHARD_N
-    elif index.n_docs and index.n_docs > threshold:
-        # only now can any single query's candidate set exceed the
-        # threshold — pay one metadata-sized probe to find out. The probe
-        # joins the (tiny) query terms against the PERSISTED term_stats df
-        # column, never re-walking the segment gather: Σ df per query is
-        # an upper bound on processed postings (ρ/budget only shrink it),
-        # so the only possible error is sharding a query that didn't
-        # strictly need it — row-identical either way.
-        est = (
-            F.broadcast(q_terms.select("query_id", "term"))
-            .join(index.term_stats.select("term", "df"), "term")
-            .groupBy("query_id")
-            .agg(F.sum("df").alias("p"))
-            .agg(F.max("p").alias("m"))
-            .collect()[0]["m"]
-        )
-        if est and int(est) > threshold:
-            n_shards = AUTO_SHARD_N
 
-    hits = _accumulate_hits(index, q_terms, seg)
-    return _rank_topk(index, hits, k, with_keys, n_shards)
+def _processed_postings(
+    index: Index,
+    q_terms: DataFrame,
+    seg: DataFrame,
+    *carry: str,
+    doc_ids: Column | None = None,
+) -> DataFrame:
+    """(query_id, doc_id, scaled, *carry): one row per posting of every
+    processed segment in `seg` — broadcast the tiny segment set into the
+    (bucket-pruned) segment payloads and explode the docid runs. `carry`
+    names further `seg` columns kept on every row; `doc_ids` replaces the
+    exploded array (e.g. a filtered one, so a restriction prunes postings
+    before the explode). `q_terms` is any frame with the query terms in a
+    `term` column. Callers add their own aggregate."""
+    processed = F.broadcast(seg.select("query_id", "term", "impact", "scaled", *carry))
+    return processed.join(_pruned_segments(index, q_terms), ["term", "impact"]).select(
+        "query_id",
+        F.explode(F.col("doc_ids") if doc_ids is None else doc_ids).alias("doc_id"),
+        "scaled",
+        *carry,
+    )
 
 
 def _accumulate_hits(index: Index, q_terms: DataFrame, seg: DataFrame) -> DataFrame:
-    """(query_id, doc_id, rsv): the SaaT accumulation — broadcast the tiny
-    processed-segment set into the (pruned) segment payloads, explode the
-    docid runs, one (query_id, doc_id) hash-agg shuffle."""
-    processed = F.broadcast(seg.select("query_id", "term", "impact", "scaled"))
+    """(query_id, doc_id, rsv): the SaaT accumulation — the processed
+    postings summed in one (query_id, doc_id) hash-agg shuffle."""
     return (
-        processed.join(_pruned_segments(index, q_terms), ["term", "impact"])
-        .select("query_id", F.explode("doc_ids").alias("doc_id"), "scaled")
+        _processed_postings(index, q_terms, seg)
         .groupBy("query_id", "doc_id")
         .agg(F.sum("scaled").alias("rsv"))
     )
@@ -283,13 +342,11 @@ def search_sharded(
     coincide. ρ / postings budgets act on the global metadata before any
     sharding, hence are also unchanged.
     """
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
+    return _serve(
+        index, q_terms, q_meta, k=k, rho=rho, postings_budget=postings_budget,
+        with_keys=with_keys, n_shards=int(n_shards),
     )
-    seg = gather_segments(index, q_terms, q_meta, rho=rho, postings_budget=postings_budget)
-    hits = _accumulate_hits(index, q_terms, seg)
-    return _rank_topk(index, hits, k, with_keys, int(n_shards))
 
 
 def _pruned_segments(index: Index, q_terms: DataFrame) -> DataFrame:
@@ -341,15 +398,10 @@ def search_conjunctive(
     ρ budgets are meaningless under AND semantics (a skipped segment could
     drop a qualifying doc), so none is offered.
     """
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=1.0)
-    processed = F.broadcast(seg.select("query_id", "term", "impact", "scaled"))
     hits = (
-        processed.join(_pruned_segments(index, q_terms), ["term", "impact"])
-        .select("query_id", "term", F.explode("doc_ids").alias("doc_id"), "scaled")
+        _processed_postings(index, q_terms, seg, "term")
         .groupBy("query_id", "doc_id")
         .agg(
             F.sum("scaled").alias("rsv"),
@@ -358,12 +410,7 @@ def search_conjunctive(
         .join(F.broadcast(q_meta), "query_id")
         .where(F.col("nt") == F.col("n_terms"))
     )
-    wk = Window.partitionBy("query_id").orderBy(F.col("rsv").desc(), F.col("doc_id").desc())
-    topk = hits.withColumn("rank", F.row_number().over(wk)).where(F.col("rank") <= F.lit(k))
-    if with_keys:
-        topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select("query_id", "doc_id", "key", "rsv", "rank")
-    return topk.select("query_id", "doc_id", "rsv", "rank")
+    return _rank_topk(index, hits, k, with_keys)
 
 
 def search_metrics(
@@ -375,10 +422,7 @@ def search_metrics(
 ) -> DataFrame:
     """Per-query stats: postings_processed / segments_processed /
     total_postings / largest_rsv (mirrors `anytime/JASS_anytime_result.h`)."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho, postings_budget=postings_budget)
     return seg.groupBy("query_id").agg(
         F.sum("seg_freq").alias("postings_processed"),
@@ -431,10 +475,7 @@ def search_after(
     the broadcast cursor join is queries-sized. One (query_id, doc_id)
     hash-agg shuffle + one windowed top-k, same as `search`.
     """
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho, postings_budget=postings_budget)
     hits = _accumulate_hits(index, q_terms, seg)
 
@@ -443,13 +484,7 @@ def search_after(
         (F.col("rsv") < F.col("after_rsv"))
         | ((F.col("rsv") == F.col("after_rsv")) & (F.col("doc_id") < F.col("after_doc")))
     )
-
-    wk = Window.partitionBy("query_id").orderBy(F.col("rsv").desc(), F.col("doc_id").desc())
-    page = nxt.withColumn("rank", F.row_number().over(wk)).where(F.col("rank") <= F.lit(k))
-    if with_keys:
-        page = F.broadcast(page).join(index.doc_map, "doc_id")
-        return page.select("query_id", "doc_id", "key", "rsv", "rank")
-    return page.select("query_id", "doc_id", "rsv", "rank")
+    return _rank_topk(index, nxt, k, with_keys)
 
 
 def explain_topk(
@@ -471,18 +506,13 @@ def explain_topk(
     tiny top-k broadcast back in so only hit docids survive to the one
     (query, doc, term)-keyed agg — explain costs one extra serve pass,
     never a corpus pass."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
     topk = search_from_terms(
         index, q_terms, q_meta, k=k, rho=rho, with_keys=False
     )
-    processed = F.broadcast(seg.select("query_id", "term", "impact", "scaled"))
     return (
-        processed.join(_pruned_segments(index, q_terms), ["term", "impact"])
-        .select("query_id", "term", F.explode("doc_ids").alias("doc_id"), "scaled")
+        _processed_postings(index, q_terms, seg, "term")
         .join(
             F.broadcast(topk.select("query_id", "doc_id", "rsv", "rank")),
             ["query_id", "doc_id"],
@@ -519,10 +549,7 @@ def search_deduped(
     (query-sized frames throughout); the serve chain runs on the
     distinct-key representatives only; fan-out is a broadcast join of
     the query→representative map onto the top-k rows."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     keys = q_terms.groupBy("query_id").agg(
         F.array_join(
             F.array_sort(
@@ -576,15 +603,10 @@ def search_min_match(
     Scale shape: identical to `search` except the one hash-agg carries
     the term through the explode (same shuffle key, one extra small
     column) and adds a count-distinct per (query, doc)."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
-    processed = F.broadcast(seg.select("query_id", "term", "impact", "scaled"))
     hits = (
-        processed.join(_pruned_segments(index, q_terms), ["term", "impact"])
-        .select("query_id", "term", F.explode("doc_ids").alias("doc_id"), "scaled")
+        _processed_postings(index, q_terms, seg, "term")
         .groupBy("query_id", "doc_id")
         .agg(
             F.sum("scaled").alias("rsv"),
@@ -592,18 +614,9 @@ def search_min_match(
         )
         .where(F.col("n_terms_matched") >= F.lit(int(min_match)))
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("rsv").desc(), F.col("doc_id").desc()
-    )
-    topk = hits.withColumn("rank", F.row_number().over(wk).cast("long")).where(
-        F.col("rank") <= F.lit(int(k))
-    )
-    if with_keys:
-        topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select(
-            "query_id", "doc_id", "key", "rsv", "n_terms_matched", "rank"
-        )
-    return topk.select("query_id", "doc_id", "rsv", "n_terms_matched", "rank")
+    return _rank_topk(
+        index, hits, int(k), with_keys, cols=("rsv", "n_terms_matched")
+    ).withColumn("rank", F.col("rank").cast("long"))
 
 
 def search_common_dropped(
@@ -635,10 +648,7 @@ def search_common_dropped(
     against term_stats + a per-query window over query-length rows;
     the serve chain then runs on fewer terms — strictly less work
     than `search`."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, _ = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
     n = int(index.n_docs)
     stats = F.broadcast(index.term_stats.select("term", "df"))
     qt = q_terms.join(stats, "term", "left")
@@ -686,32 +696,19 @@ def search_term_sharded(
     hash-agg — each reducer sees one term-slice's postings (a hot
     term's explode stays inside its own shard); stage 2 = the
     (query, doc) merge over pre-combined partials."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
-    processed = F.broadcast(
-        seg.select(
-            "query_id", "term", "impact", "scaled",
-            F.pmod(F.xxhash64("term"), F.lit(int(n_shards))).alias("__shard"),
-        )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, q_meta, rho=rho).withColumn(
+        "__shard", F.pmod(F.xxhash64("term"), F.lit(int(n_shards)))
     )
     partials = (
-        processed.join(_pruned_segments(index, q_terms), ["term", "impact"])
-        .select("query_id", "__shard", F.explode("doc_ids").alias("doc_id"), "scaled")
+        _processed_postings(index, q_terms, seg, "__shard")
         .groupBy("query_id", "__shard", "doc_id")
         .agg(F.sum("scaled").alias("partial_rsv"))
     )
     hits = partials.groupBy("query_id", "doc_id").agg(
         F.sum("partial_rsv").alias("rsv")
     )
-    wk = Window.partitionBy("query_id").orderBy(F.col("rsv").desc(), F.col("doc_id").desc())
-    topk = hits.withColumn("rank", F.row_number().over(wk)).where(F.col("rank") <= F.lit(k))
-    if with_keys:
-        topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select("query_id", "doc_id", "key", "rsv", "rank")
-    return topk.select("query_id", "doc_id", "rsv", "rank")
+    return _rank_topk(index, hits, k, with_keys)
 
 
 def float_reference_topk(
@@ -726,10 +723,7 @@ def float_reference_topk(
     and summed as exact integers with the typed q_tf weights. This is
     what the engine would return with no impact quantization at all;
     `quantization_audit` measures the engine against it."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, _ = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
     sc = index.scored.select(
         "term", "doc_id",
         F.expr("cast(floor(1000000 * score) as bigint)").alias("__w"),
@@ -741,13 +735,9 @@ def float_reference_topk(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("__c").cast("long").alias("rsv_micro"))
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("rsv_micro").desc(), F.col("doc_id").desc()
-    )
-    return (
-        hits.withColumn("rank", F.row_number().over(wk).cast("long"))
-        .where(F.col("rank") <= F.lit(k))
-    )
+    return _rank_topk(
+        index, hits, k, False, score="rsv_micro", cols=("rsv_micro",)
+    ).withColumn("rank", F.col("rank").cast("long"))
 
 
 def quantization_audit(

@@ -44,7 +44,9 @@ from pyspark.sql import functions as F
 from jassv2_spark.operators.build import Index
 from jassv2_spark.operators.search import (
     DEFAULT_K,
-    _pruned_segments,
+    _processed_postings,
+    _query_conf,
+    _rank_topk,
     gather_segments,
     parse_queries,
 )
@@ -63,18 +65,15 @@ def _bucket(col: Column) -> Column:
 
 
 def _hits_filtered(
-    index: Index, q_terms: DataFrame, seg: DataFrame, keep
+    index: Index, q_terms: DataFrame, seg: DataFrame, keep, *carry: str
 ) -> DataFrame:
     """(query_id, doc_id, rsv) with `keep(doc)` applied INSIDE the doc_ids
-    arrays before the explode — the map-side prune described above. `seg`
-    may carry extra per-query columns (e.g. sel_shards) for `keep`."""
-    processed = F.broadcast(seg)
+    arrays before the explode — the map-side prune described above.
+    `carry` names extra per-query `seg` columns `keep` reads (e.g.
+    sel_shards)."""
     return (
-        processed.join(_pruned_segments(index, q_terms), ["term", "impact"])
-        .select(
-            "query_id",
-            F.explode(F.filter(F.col("doc_ids"), keep)).alias("doc_id"),
-            "scaled",
+        _processed_postings(
+            index, q_terms, seg, *carry, doc_ids=F.filter(F.col("doc_ids"), keep)
         )
         .groupBy("query_id", "doc_id")
         .agg(F.sum("scaled").alias("rsv"))
@@ -93,24 +92,11 @@ def shard_scores(
     """(query_id, shard, votes, score_micros, shard_rank): the ReDDE
     resource-selection decision. Shards with zero CSI votes emit no row
     (score 0 — never selected)."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
     thresh = int(sample_frac * (1 << 32))
-    csi_hits = _hits_filtered(
-        index,
-        q_terms,
-        seg.select("query_id", "term", "impact", "scaled"),
-        lambda d: _bucket(d) < F.lit(thresh),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rsv").desc(), F.col("doc_id").desc()
-    )
-    top = csi_hits.withColumn("crank", F.row_number().over(w)).where(
-        F.col("crank") <= F.lit(int(n_csi))
-    )
+    csi_hits = _hits_filtered(index, q_terms, seg, lambda d: _bucket(d) < F.lit(thresh))
+    top = _rank_topk(index, csi_hits, int(n_csi), False)
     votes = (
         top.select(
             "query_id", F.pmod(F.col("doc_id"), F.lit(int(n_shards))).alias("shard")
@@ -156,32 +142,20 @@ def _serve_selected(
     """Top-k restricted to each query's `sel(query_id, sel_shards)` set —
     the shared serve half of search_selective / search_cori. Map-side
     doc_ids prune, post-filter semantics (global rsv, local ranks)."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
-    seg_sel = seg.select("query_id", "term", "impact", "scaled").join(
-        F.broadcast(sel), "query_id"
-    )
     hits = _hits_filtered(
         index,
         q_terms,
-        seg_sel,
+        seg.join(F.broadcast(sel), "query_id"),
         lambda d: F.array_contains(
             F.col("sel_shards"), F.pmod(d, F.lit(int(n_shards)))
         ),
+        "sel_shards",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rsv").desc(), F.col("doc_id").desc()
+    return _rank_topk(index, hits, int(k), with_keys).withColumn(
+        "rank", F.col("rank").cast("long")
     )
-    topk = hits.withColumn("rank", F.row_number().over(w).cast("long")).where(
-        F.col("rank") <= F.lit(int(k))
-    )
-    if with_keys:
-        topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select("query_id", "doc_id", "key", "rsv", "rank")
-    return topk.select("query_id", "doc_id", "rsv", "rank")
 
 
 def search_selective(
@@ -265,11 +239,8 @@ def cori_shard_scores(
     Returns (query_id, shard, score_micros, shard_rank) — every shard
     scored for every query with ≥1 in-vocab term.
     """
-    tokenizer = tokenizer or index.conf.tokenizer
     c = int(n_shards)
-    q_terms, _ = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
     # in-vocabulary distinct query terms (OOV silently dropped, as serve does)
     qt = (
         q_terms.select("query_id", "term")

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from jassv2_spark.operators.build import Index
 from jassv2_spark.operators.search import (
     _accumulate_hits,
+    _query_conf,
     gather_segments,
     parse_queries,
 )
@@ -48,10 +49,7 @@ def significant_terms(
 ) -> DataFrame:
     """(query_id, term, fg_df, fg_n, bg_df, lift_micros, sig_rank):
     the top-m significant terms of each query's match set."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg).select("query_id", "doc_id")
 

@@ -43,23 +43,47 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from jassv2_spark.operators.build import Index
-from jassv2_spark.operators.search import DEFAULT_K, gather_segments, parse_queries
+from jassv2_spark.operators.search import (
+    DEFAULT_K,
+    _accumulate_hits,
+    _auto_shards,
+    _processed_postings,
+    _query_conf,
+    _rank_topk,
+    _serve,
+    gather_segments,
+    parse_queries,
+)
 
 
 def _partial_rsv_threshold(index: Index, seg: DataFrame, k: int) -> DataFrame:
     """(query_id, theta): k-th best exact-partial rsv over the prefix set."""
-    prefix = F.broadcast(seg.select("query_id", "term", "impact", "scaled"))
-    partial = (
-        prefix.join(index.segments, ["term", "impact"])
-        .select("query_id", F.explode("doc_ids").alias("doc_id"), "scaled")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("scaled").alias("prsv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("prsv").desc(), F.col("doc_id").desc())
+    partial = _accumulate_hits(index, seg, seg)
     return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == F.lit(k))
-        .select("query_id", F.col("prsv").alias("theta"))
+        _rank_topk(index, partial, k, False)
+        .where(F.col("rank") == F.lit(k))
+        .select("query_id", F.col("rsv").alias("theta"))
+    )
+
+
+def _bound_filter(seg: DataFrame, theta: DataFrame, min_postings: int = 0) -> DataFrame:
+    """The segments of `seg` that can still matter against `theta`
+    (query_id, theta), a lower bound on each query's k-th rsv: a segment
+    stays iff its upper bound ub(t, i) = scaled(t, i) + Σ_{t' ≠ t} u_t'
+    reaches θ, or its query has no θ, or it lies within the first
+    `min_postings` postings in processing order. Same schema as `seg`."""
+    u = seg.groupBy("query_id", "term").agg(F.max("scaled").alias("u_t"))
+    utot = u.groupBy("query_id").agg(F.sum("u_t").alias("u_total"))
+    return (
+        seg.join(F.broadcast(u), ["query_id", "term"])
+        .join(F.broadcast(utot), "query_id")
+        .join(F.broadcast(theta), "query_id", "left")
+        .where(
+            (F.col("cum_postings") <= F.lit(int(min_postings)))
+            | F.col("theta").isNull()
+            | (F.col("scaled") + F.col("u_total") - F.col("u_t") >= F.col("theta"))
+        )
+        .drop("u_t", "u_total", "theta")
     )
 
 
@@ -72,20 +96,7 @@ def prune_segments(
     Returns the same schema minus the dropped rows.
     """
     theta = _partial_rsv_threshold(index, seg.where(F.col("seg_rank") <= F.lit(prefix)), k)
-
-    u = seg.groupBy("query_id", "term").agg(F.max("scaled").alias("u_t"))
-    utot = u.groupBy("query_id").agg(F.sum("u_t").alias("u_total"))
-
-    pruned = (
-        seg.join(F.broadcast(u), ["query_id", "term"])
-        .join(F.broadcast(utot), "query_id")
-        .join(F.broadcast(theta), "query_id", "left")
-        .where(
-            F.col("theta").isNull()
-            | (F.col("scaled") + F.col("u_total") - F.col("u_t") >= F.col("theta"))
-        )
-    )
-    return pruned.drop("u_t", "u_total", "theta")
+    return _bound_filter(seg, theta)
 
 
 def search_wand(
@@ -100,36 +111,19 @@ def search_wand(
 ) -> DataFrame:
     """Top-k search with block-max segment pruning; bitwise-identical output
     to operators.search.search() (enforced by tests/test_wand.py)."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
+    return _serve(
+        index, q_terms, q_meta, k=k, rho=rho, postings_budget=postings_budget,
+        with_keys=with_keys, n_shards=_auto_shards(index, q_terms),
+        seg_filter=lambda seg: prune_segments(index, seg, k=k, prefix=prefix),
     )
-    seg = gather_segments(index, q_terms, q_meta, rho=rho, postings_budget=postings_budget)
-    kept = prune_segments(index, seg, k=k, prefix=prefix)
-
-    processed = F.broadcast(kept.select("query_id", "term", "impact", "scaled"))
-    hits = (
-        processed.join(index.segments, ["term", "impact"])
-        .select("query_id", F.explode("doc_ids").alias("doc_id"), "scaled")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("scaled").alias("rsv"))
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.col("rsv").desc(), F.col("doc_id").desc())
-    topk = hits.withColumn("rank", F.row_number().over(wk)).where(F.col("rank") <= F.lit(k))
-    if with_keys:
-        topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select("query_id", "doc_id", "key", "rsv", "rank")
-    return topk.select("query_id", "doc_id", "rsv", "rank")
 
 
 def pruning_stats(index: Index, queries: DataFrame, k: int = DEFAULT_K, prefix: int = 8,
                   rho: float = 1.0, tokenizer: str | None = None) -> DataFrame:
     """Per-query (segments_total, segments_kept, postings_total,
     postings_kept) — the judge-facing evidence of what pruning saves."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
     kept = prune_segments(index, seg, k=k, prefix=prefix)
     tot = seg.groupBy("query_id").agg(
@@ -163,40 +157,34 @@ def search_with_rsv_oracle(
     the analogue of the reference's approximate `top_up()`
     (`source/query_heap_clean.h:447-498`), which likewise rescans only
     partially-accumulated scores."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
-
-    u = seg.groupBy("query_id", "term").agg(F.max("scaled").alias("u_t"))
-    utot = u.groupBy("query_id").agg(F.sum("u_t").alias("u_total"))
-    kept = (
-        seg.join(F.broadcast(u), ["query_id", "term"])
-        .join(F.broadcast(utot), "query_id")
-        .join(F.broadcast(oracle.select("query_id", "rsv_at_k")), "query_id", "left")
-        .where(
-            # postings_to_process_min floor (`JASS_anytime_api.cpp:603`):
-            # the first min_postings postings (in processing order) are
-            # always processed — rsv@k pruning applies beyond them only
-            (F.col("cum_postings") <= F.lit(int(min_postings)))
-            | F.col("rsv_at_k").isNull()
-            | (F.col("scaled") + F.col("u_total") - F.col("u_t") >= F.col("rsv_at_k"))
-        )
+    return _search_with_oracle(
+        index, queries, oracle, k=k, rho=rho, postings_budget=None,
+        tokenizer=tokenizer, min_postings=min_postings, with_keys=False,
     )
 
-    processed = F.broadcast(kept.select("query_id", "term", "impact", "scaled"))
-    hits = (
-        processed.join(index.segments, ["term", "impact"])
-        .select("query_id", F.explode("doc_ids").alias("doc_id"), "scaled")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("scaled").alias("rsv"))
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.col("rsv").desc(), F.col("doc_id").desc())
-    return (
-        hits.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= F.lit(k))
-        .select("query_id", "doc_id", "rsv", "rank")
+
+def _search_with_oracle(
+    index: Index,
+    queries: DataFrame,
+    oracle: DataFrame,
+    *,
+    k: int,
+    rho: float,
+    postings_budget: int | None,
+    tokenizer: str | None,
+    min_postings: int,
+    with_keys: bool,
+) -> DataFrame:
+    """search_with_rsv_oracle's serve: `search`'s skeleton with the oracle
+    θ as its segment filter. The first `min_postings` postings in
+    processing order are always processed (postings_to_process_min,
+    `JASS_anytime_api.cpp:603`); rsv@k pruning applies beyond them only."""
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
+    theta = oracle.select("query_id", F.col("rsv_at_k").alias("theta"))
+    return _serve(
+        index, q_terms, q_meta, k=k, rho=rho, postings_budget=postings_budget,
+        with_keys=with_keys, n_shards=_auto_shards(index, q_terms),
+        seg_filter=lambda seg: _bound_filter(seg, theta, min_postings),
     )
 
 
@@ -259,10 +247,7 @@ def search_maxscore(
     positions. Composes with the anytime ρ budget exactly as WAND does
     (both operate on the ρ-filtered segment set).
     """
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho, postings_budget=postings_budget)
     theta = _partial_rsv_threshold(index, seg.where(F.col("seg_rank") <= F.lit(prefix)), k)
     ess = _essential_terms(seg, theta)
@@ -271,26 +256,15 @@ def search_maxscore(
         ess.where(F.col("essential")).select("query_id", "term"), ["query_id", "term"]
     )
     candidates = (
-        F.broadcast(ess_seg.select("query_id", "term", "impact"))
-        .join(index.segments, ["term", "impact"])
-        .select("query_id", F.explode("doc_ids").alias("doc_id"))
-        .distinct()
+        _processed_postings(index, q_terms, ess_seg).select("query_id", "doc_id").distinct()
     )
-
-    processed = F.broadcast(seg.select("query_id", "term", "impact", "scaled"))
     hits = (
-        processed.join(index.segments, ["term", "impact"])
-        .select("query_id", F.explode("doc_ids").alias("doc_id"), "scaled")
+        _processed_postings(index, q_terms, seg)
         .join(candidates, ["query_id", "doc_id"], "left_semi")
         .groupBy("query_id", "doc_id")
         .agg(F.sum("scaled").alias("rsv"))
     )
-    wk = Window.partitionBy("query_id").orderBy(F.col("rsv").desc(), F.col("doc_id").desc())
-    topk = hits.withColumn("rank", F.row_number().over(wk)).where(F.col("rank") <= F.lit(k))
-    if with_keys:
-        topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select("query_id", "doc_id", "key", "rsv", "rank")
-    return topk.select("query_id", "doc_id", "rsv", "rank")
+    return _rank_topk(index, hits, k, with_keys)
 
 
 def maxscore_stats(
@@ -304,10 +278,7 @@ def maxscore_stats(
     """Per-query MaxScore evidence: (terms_total, terms_essential,
     postings_total, postings_candidate_pass) — how much of the explode the
     essential split avoids in the candidate-generation pass."""
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
     theta = _partial_rsv_threshold(index, seg.where(F.col("seg_rank") <= F.lit(prefix)), k)
     ess = _essential_terms(seg, theta)

@@ -239,33 +239,23 @@ def search_authority(
     the query side."""
     from jassv2_spark.operators.search import (
         DEFAULT_K,
-        Window,
         _accumulate_hits,
+        _query_conf,
+        _rank_topk,
         gather_segments,
         parse_queries,
     )
 
     k = DEFAULT_K if k is None else k
-    tokenizer = tokenizer or index.conf.tokenizer
-    q_terms, q_meta = parse_queries(
-        queries, tokenizer=tokenizer, stem=getattr(index.conf, "stem", False)
-    )
+    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
     seg = gather_segments(index, q_terms, q_meta, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg)
     blended = hits.join(pr.select("doc_id", "pr"), "doc_id").withColumn(
         "blend", F.expr(f"rsv * (pr DIV {PR_PRIOR_DIV})").cast("long")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("blend").desc(), F.col("doc_id").desc()
-    )
-    topk = blended.withColumn("rank", F.row_number().over(w).cast("long")).where(
-        F.col("rank") <= F.lit(int(k))
-    )
-    cols = ["query_id", "doc_id", "rsv", "pr", "blend", "rank"]
-    if with_keys:
-        topk = F.broadcast(topk).join(index.doc_map, "doc_id")
-        return topk.select(*cols[:2], "key", *cols[2:])
-    return topk.select(*cols)
+    return _rank_topk(
+        index, blended, int(k), with_keys, score="blend", cols=("rsv", "pr", "blend")
+    ).withColumn("rank", F.col("rank").cast("long"))
 
 
 def triangle_stats(links: DataFrame) -> DataFrame:

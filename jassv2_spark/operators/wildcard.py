@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from jassv2_spark.operators.build import Index
-from jassv2_spark.operators.search import DEFAULT_K, search_from_terms
+from jassv2_spark.operators.search import DEFAULT_K, _query_conf, search_from_terms
 
 # one token language for wildcard queries on both engines: lowercase
 # alnum runs that may carry '*' anywhere (RE2-safe, no alternation
@@ -171,7 +171,8 @@ def search_wildcard(
     `search` would — including stemming to the vocabulary form on a
     stem-built index (OOV drops at the vocab join as always). n_terms
     counts the expanded term set pre-vocab-drop, mirroring `search`."""
-    qt = parse_wildcard_queries(queries, stem=getattr(index.conf, "stem", False))
+    _, stem = _query_conf(index)
+    qt = parse_wildcard_queries(queries, stem=stem)
     pats = qt.where("is_pattern").select(F.col("term").alias("pattern"))
     cand = wildcard_term_expansions(index.term_stats, pats, max_expand=max_expand)
     expanded_rows = (

@@ -13,10 +13,14 @@ than a fully streaming aggregation.
   ingest_stream(...)  docs stream → tokenize → (doc_id, term, cnt) append
   finalize(...)       counts snapshot → impacts → segments (reuses the
                       checkpointed batch stages from plans/persist.py)
+
+The counts depend on the tokenizer and stem setting, so ingest_stream
+records them in <out>/stream_conf.json and finalize builds with them.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +29,32 @@ from pyspark.sql.streaming import StreamingQuery
 
 from jassv2_spark.operators.build import BuildConf, count_terms
 
+STREAM_CONF = "stream_conf.json"
+
+
+def _stream_conf(out_dir: str, conf: BuildConf | None) -> BuildConf:
+    """The BuildConf for the stream under `out_dir`: its recorded tokenizer
+    and stem, which `conf` must not contradict (ValueError); `conf`'s other
+    settings apply. A directory without a record gets `conf`'s (or the
+    defaults') recorded."""
+    path = os.path.join(out_dir, STREAM_CONF)
+    if not os.path.exists(path):
+        conf = conf or BuildConf()
+        os.makedirs(out_dir, exist_ok=True)
+        with open(path, "w") as f:
+            json.dump({"tokenizer": conf.tokenizer, "stem": conf.stem}, f)
+        return conf
+    with open(path) as f:
+        rec = json.load(f)
+    if conf is None:
+        return BuildConf(**rec)
+    if (conf.tokenizer, conf.stem) != (rec["tokenizer"], rec["stem"]):
+        raise ValueError(
+            f"{out_dir} counts with tokenizer={rec['tokenizer']!r}, "
+            f"stem={rec['stem']}; got tokenizer={conf.tokenizer!r}, stem={conf.stem}"
+        )
+    return conf
+
 
 def ingest_stream(
     docs_stream: DataFrame,
@@ -32,21 +62,22 @@ def ingest_stream(
     *,
     text_col: str = "text",
     doc_id_col: str = "doc_id",
-    tokenizer: str = "parity",
+    conf: BuildConf | None = None,
     trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Start a streaming query appending per-batch (doc_id, term, cnt) rows
     to <out>/counts_stream and (doc_id, dl) to <out>/doc_lengths_stream.
 
     Each micro-batch runs the batch build's counting pass
-    (operators/build.py:count_terms); counts are additive across batches
-    because each document arrives exactly once (dedupe upstream via
-    dedup.exact_duplicates)."""
+    (operators/build.py:count_terms) with `conf`'s tokenizer and stem
+    setting, which are recorded under `out_dir` for `finalize`; counts are
+    additive across batches because each document arrives exactly once
+    (dedupe upstream via dedup.exact_duplicates)."""
+    conf = _stream_conf(out_dir, conf)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         counts = count_terms(
-            batch_df, text_col=text_col, doc_id_col=doc_id_col,
-            conf=BuildConf(tokenizer=tokenizer),
+            batch_df, text_col=text_col, doc_id_col=doc_id_col, conf=conf
         ).withColumn("batch_id", F.lit(batch_id))
         counts.select("doc_id", "term", "cnt", "batch_id").write.mode("append").parquet(
             os.path.join(out_dir, "counts_stream")
@@ -72,10 +103,14 @@ def finalize(spark: SparkSession, out_dir: str, conf: BuildConf | None = None):
     (plans/persist.py) as its pre-built "counts"/"doc_map" stages, so every
     downstream stage (doc lengths → scoring → segments → vocab metadata) is
     the SAME code the batch build runs. Rerunnable; each finalize rebuilds the
-    snapshot's quantization (global min/max must see everything)."""
+    snapshot's quantization (global min/max must see everything). The
+    build uses the tokenizer and stem setting the stream counted with;
+    a `conf` that names others raises ValueError."""
     import shutil
 
     from jassv2_spark.plans import persist as P
+
+    conf = _stream_conf(out_dir, conf)
 
     final_dir = os.path.join(out_dir, "final")
     if os.path.isdir(final_dir):
@@ -95,5 +130,5 @@ def finalize(spark: SparkSession, out_dir: str, conf: BuildConf | None = None):
     # docs arg is unused once doc_map+counts stages exist; pass doc_map
     return P.build_index_persisted(
         doc_map, final_dir, text_col="text", key_col="key", doc_id_col="doc_id",
-        conf=conf or BuildConf(),
+        conf=conf,
     )

@@ -4,7 +4,7 @@ file-in/file-out workflow, end-to-end on the ten-document corpus."""
 import os
 
 from jassv2_spark.cli import jass_anytime_main, jass_eval_main, jass_index_main
-from jassv2_spark.fixtures import ten_documents
+from jassv2_spark.fixtures import TEN_DOC_QUERIES, ten_documents
 
 
 def test_cli_index_anytime_eval_roundtrip(spark, tmp_path, capsys):
@@ -56,6 +56,30 @@ def test_cli_index_anytime_eval_roundtrip(spark, tmp_path, capsys):
     assert jass_eval_main(["-a", str(qrels_p), "-r", run]) == 0
     out_p = capsys.readouterr().out
     assert any("mean_buying_power" in l for l in out_p.splitlines())
+
+
+def test_cli_anytime_oracle_rsv_file(spark, tmp_path):
+    """`jass anytime -Q rsvfile` (the reference's oracle rsv@k mode): with
+    each query's k-th score from a first run as its oracle, the run is
+    identical to the run without -Q."""
+    trec = tmp_path / "docs.trec"
+    trec.write_bytes(b"".join(r["html"] for r in ten_documents()))
+    ix = str(tmp_path / "ix")
+    assert jass_index_main(["-f", str(trec), "-o", ix]) == 0
+    qfile = tmp_path / "queries.txt"
+    qfile.write_text("".join(f"{qid} {q}\n" for qid, q in TEN_DOC_QUERIES))
+
+    run = tmp_path / "ranking.txt"
+    assert jass_anytime_main(["-i", ix, "-q", str(qfile), "-k", "3", "-o", str(run)]) == 0
+    lines = [l.split() for l in run.read_text().splitlines() if l.strip()]
+    rsv_file = tmp_path / "rsv.txt"
+    rsv_file.write_text("".join(f"{l[0]} {l[4]}\n" for l in lines if l[3] == "3"))
+    assert rsv_file.read_text()  # some query has k results
+
+    run_q = tmp_path / "ranking_q.txt"
+    argv = ["-i", ix, "-q", str(qfile), "-k", "3", "-Q", str(rsv_file), "-o", str(run_q)]
+    assert jass_anytime_main(argv) == 0
+    assert run_q.read_text() == run.read_text()
 
 
 def test_cli_curate(tmp_path, capsys):

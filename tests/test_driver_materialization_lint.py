@@ -74,7 +74,7 @@ ALLOWED = {
     # one scalar row: Σdf for the data-sized bucket count (round-5)
     ("saat.py", "package_index", "collect"): "scalar",
     ("search.py", "_pruned_segments", "collect"): "query-bounded",  # bucket ids
-    ("search.py", "search_from_terms", "collect"): "scalar",  # shard estimate
+    ("search.py", "_auto_shards", "collect"): "scalar",  # shard estimate
     ("textstats.py", "heaps_profile", "collect"): "scalar",
     ("textstats.py", "zipf_slope", "collect"): "vocab-bounded",  # top_r ranks
     ("tiered.py", "search_tiered", "collect"): "scalar",

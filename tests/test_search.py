@@ -216,6 +216,28 @@ def test_engine_reference_api_surface(spark):
     idx.unpersist()
 
 
+def test_oracle_search_keeps_the_postings_budget(ten, spark):
+    """An oracle (`anytime_bootstrap`, CLI -Q) prunes within the absolute
+    postings budget (CLI -R/-r), never instead of it: after a budgeted
+    bootstrap the oracle search returns the budgeted rows."""
+    from jassv2_spark.engine import Engine
+
+    eng = Engine(ten[0])
+    eng.set_top_k(5)
+    qdf = spark.createDataFrame(TEN_DOC_QUERIES, ["query_id", "query"])
+
+    def rows(res):
+        return sorted((r["query_id"], r["rank"], r["doc_id"], r["rsv"]) for r in res.collect())
+
+    unbudgeted = rows(eng.search(qdf))
+    eng.set_postings_to_process(3)
+    budgeted = rows(eng.search(qdf))
+    assert budgeted != unbudgeted  # the budget changes some query's top-k
+    assert rows(eng.anytime_bootstrap(qdf)) == budgeted
+    assert eng.oracle is not None
+    assert rows(eng.search(qdf)) == budgeted
+
+
 def test_conjunctive_and_semantics(ten, spark):
     from jassv2_spark.operators.search import search_conjunctive
 

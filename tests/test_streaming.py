@@ -3,8 +3,10 @@ index built over the same documents."""
 
 import os
 
+import pytest
+
 from jassv2_spark.fixtures import synthetic_corpus, synthetic_queries
-from jassv2_spark.operators.build import build_index
+from jassv2_spark.operators.build import BuildConf, build_index
 from jassv2_spark.operators.search import search
 from jassv2_spark.streaming.incremental import finalize, ingest_stream
 
@@ -41,6 +43,33 @@ def test_stream_ingest_equals_batch(spark, tmp_path):
     a = sorted(map(tuple, search(idx_s, qdf, k=10, with_keys=False).collect()))
     b = sorted(map(tuple, search(idx_b, qdf, k=10, with_keys=False).collect()))
     assert a == b
+
+
+def test_stream_ingest_stems_like_build_index(spark, tmp_path):
+    """A stem=True stream counts stemmed terms, so its finalized vocabulary
+    is build_index's; finalize refuses a conf that contradicts the
+    stream's recorded tokenizer/stem."""
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "stream_idx")
+    docs = spark.createDataFrame([(1, "running jumping"), (2, "runs jumped")], ["doc_id", "text"])
+    docs.write.parquet(src)
+    conf = BuildConf(stem=True)
+
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    q = ingest_stream(stream, out, conf=conf, trigger_available_now=True)
+    q.awaitTermination(120)
+
+    idx_s = finalize(spark, out)
+    idx_b = build_index(
+        docs, text_col="text", key_col="doc_id", doc_id_col="doc_id", conf=conf, cache=False
+    )
+
+    def vocab(idx):
+        return {r["term"] for r in idx.term_stats.select("term").collect()}
+
+    assert vocab(idx_s) == vocab(idx_b) == {"jump", "run"}
+    with pytest.raises(ValueError):
+        finalize(spark, out, conf=BuildConf())
 
 
 def test_stateful_dedup_stream(spark, tmp_path):
