@@ -117,7 +117,8 @@ class Engine:
 
     def get_encoding_scheme_name(self) -> str:
         """Segment storage codec ('parquet' = native array columns with
-        parquet's own encodings; else the delta+codec BinaryType layout)."""
+        parquet's own encodings; else the codec table name of the
+        d1 + codec BinaryType layout)."""
         return getattr(self.index.conf, "codec", None) or "parquet"
 
     # -- serving -------------------------------------------------------

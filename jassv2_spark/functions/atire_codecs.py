@@ -11,8 +11,8 @@ implementations below are proven byte-identical to those classes by
 tests/test_codec_differential.py fuzz (codec_tool names "Variable Byte"
 and "Simple-8b").
 
-Driver/exporter-side use only (plans/jass_v1.py); the engine's at-scale
-postings layout remains parquet (SURVEY §2.9).
+Both are reached by name through functions/codecs.py; variable byte also
+writes the JASS v2 headers and vocabulary (plans/jass_v1.py).
 """
 
 from __future__ import annotations
@@ -23,10 +23,14 @@ from __future__ import annotations
 def vbyte_array_encode(values) -> bytes:
     """`compress_integer_variable_byte::encode`: each integer big-endian
     in 7-bit groups, stop bit (0x80) on the LAST byte
-    (`compress_integer_variable_byte.h:24-38`)."""
+    (`compress_integer_variable_byte.h:24-38`). The reference's domain is
+    uint32; the same format carries any non-negative integer, which the
+    JASS v2 headers and persisted docid gaps need."""
     out = bytearray()
     for v in values:
-        v = int(v) & 0xFFFFFFFF
+        v = int(v)
+        if v < 0:
+            raise ValueError(f"variable byte cannot hold negative {v}")
         group = bytearray()
         while True:
             group.append(v & 0x7F)
@@ -45,7 +49,7 @@ def vbyte_array_decode(data: bytes, count: int) -> list[int]:
     for b in data:
         value = (value << 7) | (b & 0x7F)
         if b & 0x80:
-            out.append(value & 0xFFFFFFFF)
+            out.append(value)
             value = 0
             if len(out) >= count:
                 break

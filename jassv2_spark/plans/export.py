@@ -157,17 +157,18 @@ def index_space_audit(index: Index) -> DataFrame:
     CLI-selectable — `source/compress_integer_all.cpp`). This audit prices
     the layout under the codec family without writing a byte: for each
     logical (term, impact) segment the docids are d-gapped exactly as
-    `functions/compression.py:delta_encode` does (first docid kept
-    absolute), and per gap we charge
+    `functions/qmx.py:d1_encode` does (first docid kept absolute), and
+    per gap we charge
 
     - raw_bits:    32 (the uncompressed uint32 baseline,
                    `source/serialise_integers.cpp`)
     - binary_bits: floor(log2 g)+1 — the minimal binary magnitude, the
                    lower bound any of the codec family approaches
     - vbyte_bits:  8*ceil(bits/7) — the reference's stop-bit vbyte
-                   (`source/compress_integer_variable_byte.h:24-38`)
-    - gamma_bits:  2*bits(g+1)-1 — Elias gamma of g+1, matching
-                   `functions/compression.py:gamma_encode`'s +1 shift
+                   (`source/compress_integer_variable_byte.h:24-38`, the
+                   codec table's "Variable Byte")
+    - gamma_bits:  2*bits(g+1)-1 — the codec table's "Elias gamma" of
+                   g+1 (the +1 keeps a 0 gap encodable)
 
     all in exact integer arithmetic (`length(bin(x))` is floor(log2 x)+1,
     no floating log), summed per impact level. High impacts are rare and

@@ -42,18 +42,10 @@ from typing import Iterator
 
 import pandas as pd
 
-from jassv2_spark.functions.atire_codecs import (simple8b_decode,
-                                                 simple8b_encode,
-                                                 vbyte_array_decode,
-                                                 vbyte_array_encode)
-from jassv2_spark.functions.carryover12 import (carryover12_decode,
-                                                carryover12_encode)
-from jassv2_spark.functions.ed_simd import ed_simd_decode, ed_simd_encode
-from jassv2_spark.functions.eg_simd import eg_simd_decode, eg_simd_encode
+from jassv2_spark.functions.codecs import CODECS
+from jassv2_spark.functions.ed_simd import ed_simd_encode
 from jassv2_spark.functions.pearson import hash_24
-from jassv2_spark.functions.qmx import d1_decode, d1_encode, qmx_decode, qmx_encode
-from jassv2_spark.functions.qmx_original import (qmx_d0_decode, qmx_d0_encode,
-                                                 qmx_d4_decode, qmx_d4_encode)
+from jassv2_spark.functions.qmx import d1_encode
 
 CODEX_QMX = ord("q")
 CODEX_UNCOMPRESSED = ord("s")
@@ -90,30 +82,23 @@ def _realign(position: int, boundary: int) -> int:
     return boundary - position % boundary
 
 
-def _encode_none(gaps) -> bytes:
-    """The 's' codex: raw little-endian uint32s (compress_integer_none)."""
-    return b"".join((g & 0xFFFFFFFF).to_bytes(4, "little") for g in gaps)
-
-
-def _decode_none(data: bytes, count: int):
-    return [int.from_bytes(data[4 * i : 4 * i + 4], "little") for i in range(count)]
-
-
-# codex -> (encode, decode, default alignment, d1: True = segments carry
-# d1 gaps with the first element decremented ("JASS v1 counts documents
-# from 0"); False = raw 0-based docids (the QMX D4/D0 convention —
-# `JASSv1/atire_to_jass_index.c:194-205` skips the external delta)
+# codex -> (codec table name, default alignment, d1: True = segments
+# carry d1 gaps with the first element decremented ("JASS v1 counts
+# documents from 0"); False = raw 0-based docids (the QMX D4/D0
+# convention — `JASSv1/atire_to_jass_index.c:194-205` skips the external
+# delta)
 _CODECS = {
-    CODEX_QMX: (qmx_encode, qmx_decode, 16, True),
-    CODEX_UNCOMPRESSED: (_encode_none, _decode_none, 1, True),
-    CODEX_ELIAS_GAMMA_SIMD: (eg_simd_encode, eg_simd_decode, 1, True),
-    CODEX_ELIAS_GAMMA_SIMD_VB: (carryover12_encode, carryover12_decode, 1, True),
-    CODEX_ELIAS_DELTA_SIMD: (ed_simd_encode, ed_simd_decode, 1, True),
-    CODEX_VARIABLE_BYTE: (vbyte_array_encode, vbyte_array_decode, 1, True),
-    CODEX_SIMPLE_8B: (simple8b_encode, simple8b_decode, 1, True),
-    CODEX_QMX_D4: (qmx_d4_encode, qmx_d4_decode, 16, False),
-    CODEX_QMX_D0: (qmx_d0_encode, qmx_d0_decode, 16, False),
+    CODEX_QMX: ("QMX JASS v1", 16, True),
+    CODEX_UNCOMPRESSED: ("None", 1, True),
+    CODEX_ELIAS_GAMMA_SIMD: ("Group Elias Gamma SIMD", 1, True),
+    CODEX_ELIAS_GAMMA_SIMD_VB: ("Carryover-12", 1, True),
+    CODEX_ELIAS_DELTA_SIMD: ("Group Elias Delta SIMD", 1, True),
+    CODEX_VARIABLE_BYTE: ("Variable Byte", 1, True),
+    CODEX_SIMPLE_8B: ("Simple-8b", 1, True),
+    CODEX_QMX_D4: ("QMX D4 (ATIRE)", 16, False),
+    CODEX_QMX_D0: ("QMX D0 (ATIRE)", 16, False),
 }
+_vbyte_encode = CODECS["Variable Byte"][0]
 
 
 def iteration_sort_key(term: str) -> tuple[int, int, bytes]:
@@ -137,9 +122,9 @@ class _JassV1Writer:
                 f"unsupported codex {chr(codex)!r}: implemented are "
                 f"{sorted(chr(c) for c in _CODECS)}"
             )
-        encode, _decode, default_align, d1 = _CODECS[codex]
+        name, default_align, d1 = _CODECS[codex]
         self.codex = codex
-        self._encode = encode
+        self._encode = CODECS[name][0]
         self._d1 = d1
         self.alignment = default_align if alignment is None else alignment
         self.postings = open(os.path.join(out_dir, "CIpostings.bin"), "wb")
@@ -245,20 +230,6 @@ class _JassV1Writer:
 
 # ---------------------------------------------------------------- JASS v2
 
-def _vb(value: int) -> bytes:
-    """ATIRE/JASS variable byte: big-endian 7-bit groups, stop bit (0x80)
-    on the LAST byte (`source/compress_integer_variable_byte.h:266-325`)."""
-    out = bytearray()
-    while True:
-        out.append(value & 0x7F)
-        value >>= 7
-        if not value:
-            break
-    out.reverse()
-    out[-1] |= 0x80
-    return bytes(out)
-
-
 def _vb_read(buf: bytes, pos: int) -> tuple[int, int]:
     value = 0
     while True:
@@ -300,7 +271,7 @@ class _JassV2Writer(_JassV1Writer):
             enc = self._encode_segment(ids, bufpos)
             self._buf[bufpos : bufpos + len(enc)] = enc
             bufpos += len(enc)
-            hdr = (_vb(impact) + _vb(location_field) + _vb(len(enc)) + _vb(len(ids)))
+            hdr = _vbyte_encode([impact, location_field, len(enc), len(ids)])
             headers.append(hdr)
             seg_bytes.append(enc)
             location_field += len(enc) + len(hdr)
@@ -321,7 +292,7 @@ class _JassV2Writer(_JassV1Writer):
     def finish(self) -> None:
         with open(os.path.join(self.out_dir, "CIvocab.bin"), "wb") as f:
             for _term, term_off, post_off, n_imp in sorted(self.index_key):
-                f.write(_vb(term_off) + _vb(post_off) + _vb(n_imp))
+                f.write(_vbyte_encode([term_off, post_off, n_imp]))
         with open(os.path.join(self.out_dir, "CIdoclist.bin"), "wb") as f:
             for key in self.primary_keys:
                 f.write(key + b"\x00")
@@ -350,7 +321,8 @@ def read_jass_v2(in_dir: str) -> dict:
     with open(os.path.join(in_dir, "CIpostings.bin"), "rb") as f:
         postings = f.read()
     codex = postings[0]
-    _encode, decode, _align, d1 = _CODECS[codex]
+    name, _align, d1 = _CODECS[codex]
+    decode = CODECS[name][1]
     with open(os.path.join(in_dir, "CIvocab_terms.bin"), "rb") as f:
         term_blob = f.read()
     with open(os.path.join(in_dir, "CIvocab.bin"), "rb") as f:
@@ -538,7 +510,8 @@ def read_jass_v1(in_dir: str) -> dict:
     with open(os.path.join(in_dir, "CIpostings.bin"), "rb") as f:
         postings = f.read()
     codex = postings[0]
-    _encode, decode, _align, d1 = _CODECS[codex]
+    name, _align, d1 = _CODECS[codex]
+    decode = CODECS[name][1]
     with open(os.path.join(in_dir, "CIvocab_terms.bin"), "rb") as f:
         term_blob = f.read()
     with open(os.path.join(in_dir, "CIvocab.bin"), "rb") as f:

@@ -32,10 +32,12 @@ import shutil
 import time
 from typing import Callable
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, BinaryType, LongType
 
 from jassv2_spark.operators.build import (
     BuildConf,
@@ -43,6 +45,8 @@ from jassv2_spark.operators.build import (
     build_index_from_counts,
     count_terms,
 )
+from jassv2_spark.functions.codecs import CODECS
+from jassv2_spark.functions.qmx import d1_decode, d1_encode
 from jassv2_spark.sources.docids import assign_doc_ids
 
 N_TERM_BUCKETS = 64
@@ -232,11 +236,9 @@ def _write_index_tables(
 
     segments = index.segments
     if codec is not None:
-        from jassv2_spark.functions.compression import make_encode_udf
-
         segments = segments.select(
             "term", "impact", "min_doc", "part_freq",
-            make_encode_udf(codec)(F.col("doc_ids")).alias("doc_ids_enc"),
+            _encode_udf(codec)(F.col("doc_ids")).alias("doc_ids_enc"),
         )
     segments = segments.withColumn(
         "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
@@ -252,14 +254,66 @@ def _write_index_tables(
         after(stage)
 
 
+def _check_codec(codec: str | None, where: str) -> None:
+    if codec is not None and codec not in CODECS:
+        raise ValueError(
+            f"{where}: segment codec {codec!r} is not in the codec table "
+            f"(jassv2_spark.functions.codecs.CODECS): {sorted(CODECS)}"
+        )
+
+
+def _encode_doc_ids(codec: str, doc_ids) -> bytes:
+    """Ascending docids → d1 gaps (first docid kept) → the codec's bytes.
+    Raises unless the bytes decode back to the same gaps: most table
+    codecs silently corrupt a gap ≥ 2³², the Elias codes a 0, and
+    Carry-8b's reproduced reference quirks some ordinary gap arrays."""
+    encode, decode = CODECS[codec]
+    gaps = d1_encode([int(d) for d in doc_ids])
+    data = encode(gaps)
+    if list(decode(data, len(gaps))) != gaps:
+        raise ValueError(
+            f"segment codec {codec!r} does not round-trip the docid gaps "
+            f"{gaps[:8]}{' ...' if len(gaps) > 8 else ''}"
+        )
+    return data
+
+
+def _decode_doc_ids(codec: str, data: bytes, n: int) -> list[int]:
+    return d1_decode(CODECS[codec][1](data, n))
+
+
+def _encode_udf(codec: str):
+    """pandas UDF: ascending doc_ids array<long> → codec bytes."""
+
+    @F.pandas_udf(BinaryType())
+    def encode(doc_ids: pd.Series) -> pd.Series:
+        return doc_ids.map(lambda ids: _encode_doc_ids(codec, ids))
+
+    return encode
+
+
+def _decode_udf(codec: str):
+    """pandas UDF: (codec bytes, n) → ascending doc_ids array<long>."""
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def decode(data: pd.Series, n: pd.Series) -> pd.Series:
+        return pd.Series([_decode_doc_ids(codec, bytes(b), int(k)) for b, k in zip(data, n)])
+
+    return decode
+
+
 def save_index_tables(index: Index, out_dir: str, codec: str | None = None) -> None:
     """One-shot save of an in-memory Index (checkpoint markers included so
     the result is loadable and further builds skip everything).
 
     `codec`: None stores `doc_ids` as a raw array<long> (parquet's own
-    dictionary/RLE/zstd applies — the default); 'vbyte' or 'qmx' stores
-    delta+codec BinaryType, the JASS-v1-style layout
-    (`source/serialise_jass_v1.cpp:114-170` d1 + codec encode)."""
+    dictionary/RLE/zstd applies — the default); a codec table name
+    (functions/codecs.py, e.g. "Variable Byte") stores d1 gaps in that
+    codec as BinaryType, the JASS-v1-style layout
+    (`source/serialise_jass_v1.cpp:114-170` d1 + codec encode). A name
+    not in the table raises before anything is written; so does a row
+    whose gaps the codec cannot hold, during the segments stage."""
+    _check_codec(codec, "save_index_tables")
     os.makedirs(out_dir, exist_ok=True)
     doc_map_full = index.doc_map.withColumn("text", F.lit(None).cast("string"))
     _write_stage(doc_map_full, out_dir, "doc_map", lineage_key="doc_id")
@@ -269,6 +323,8 @@ def save_index_tables(index: Index, out_dir: str, codec: str | None = None) -> N
 def load_index_tables(spark: SparkSession, out_dir: str, conf: BuildConf | None = None) -> Index:
     with open(os.path.join(out_dir, "stats.json")) as f:
         stats = json.load(f)
+    codec = stats.get("codec")
+    _check_codec(codec, os.path.join(out_dir, "stats.json"))
     conf = conf or BuildConf(
         k1=stats.get("k1", 0.9),
         b=stats.get("b", 0.4),
@@ -276,14 +332,11 @@ def load_index_tables(spark: SparkSession, out_dir: str, conf: BuildConf | None 
         stem=stats.get("stem", False),
     )
     segments = spark.read.parquet(os.path.join(out_dir, "segments"))
-    codec = stats.get("codec")
     conf.codec = codec  # surfaced via Engine.get_encoding_scheme_name()
     if codec is not None and "doc_ids_enc" in segments.columns:
-        from jassv2_spark.functions.compression import make_decode_udf
-
         segments = segments.select(
             "term", "impact", "min_doc", "part_freq",
-            make_decode_udf(codec)(F.col("doc_ids_enc"), F.col("part_freq")).alias("doc_ids"),
+            _decode_udf(codec)(F.col("doc_ids_enc"), F.col("part_freq")).alias("doc_ids"),
             "term_bucket",
         )
     return Index(

@@ -176,41 +176,32 @@ def test_elias_gamma_simd_bitwise_vs_reference(codec_tool):
 # compiled reference class; domains follow each codec's own limits.
 
 _ROUND5_CODECS = [
-    # (tool name, module, encode, decode, max_bits, allow_zero)
-    ("Elias gamma", "elias", "elias_gamma_encode", "elias_gamma_decode", 28, False),
-    ("Elias delta", "elias", "elias_delta_encode", "elias_delta_decode", 28, False),
-    ("Elias gamma with bit instuctions (slow)", "elias",
-     "elias_gamma_bitwise_encode", "elias_gamma_bitwise_decode", 28, False),
-    ("Elias delta with bit instuctions (slow)", "elias",
-     "elias_delta_bitwise_encode", "elias_delta_bitwise_decode", 28, False),
-    ("Simple-9", "simple_codecs", "simple9_encode", "simple9_decode", 27, True),
-    ("Simple-16", "simple_codecs", "simple16_encode", "simple16_decode", 27, True),
-    ("Optimal Packed Simple-9", "simple_packed",
-     "simple9_packed_encode", "simple9_packed_decode", 27, True),
-    ("Optimal Packed Simple-16", "simple_packed",
-     "simple16_packed_encode", "simple16_packed_decode", 27, True),
-    ("Optimal Packed Simple-8b", "simple_packed",
-     "simple8b_packed_encode", "simple8b_packed_decode", 31, True),
-    ("Binpack into 64-bit integers", "bitpack", "bitpack64_encode", "bitpack64_decode", 31, True),
-    ("Binpack into 128-bit SIMD integers", "bitpack", "bitpack128_encode", "bitpack128_decode", 31, True),
-    ("Binpack into 256-bit SIMD integers", "bitpack", "bitpack256_encode", "bitpack256_decode", 31, True),
-    ("Binpack into 32-bit integers with 8 selectors", "bitpack",
-     "bitpack32_reduced_encode", "bitpack32_reduced_decode", 31, True),
-    ("Stream VByte", "bitpack", "stream_vbyte_encode", "stream_vbyte_decode", 31, True),
-    ("Group Elias Delta SIMD with Variable Byte", "eg_simd_vb",
-     "eg_simd_vb_encode", "eg_simd_vb_decode", 31, True),
-    ("QMX Improved", "qmx_improved", "qmx_improved_encode", "qmx_improved_decode", 31, True),
+    # (codec table name, max_bits, allow_zero)
+    ("Elias gamma", 28, False),
+    ("Elias delta", 28, False),
+    ("Elias gamma with bit instuctions (slow)", 28, False),
+    ("Elias delta with bit instuctions (slow)", 28, False),
+    ("Simple-9", 27, True),
+    ("Simple-16", 27, True),
+    ("Optimal Packed Simple-9", 27, True),
+    ("Optimal Packed Simple-16", 27, True),
+    ("Optimal Packed Simple-8b", 31, True),
+    ("Binpack into 64-bit integers", 31, True),
+    ("Binpack into 128-bit SIMD integers", 31, True),
+    ("Binpack into 256-bit SIMD integers", 31, True),
+    ("Binpack into 32-bit integers with 8 selectors", 31, True),
+    ("Stream VByte", 31, True),
+    ("Group Elias Delta SIMD with Variable Byte", 31, True),
+    ("QMX Improved", 31, True),
 ]
 
 
-@pytest.mark.parametrize("name,module,enc,dec,max_bits,allow_zero",
+@pytest.mark.parametrize("name,max_bits,allow_zero",
                          _ROUND5_CODECS, ids=[c[0] for c in _ROUND5_CODECS])
-def test_round5_codec_bitwise_vs_reference(codec_tool, name, module, enc, dec,
-                                           max_bits, allow_zero):
-    import importlib
+def test_round5_codec_bitwise_vs_reference(codec_tool, name, max_bits, allow_zero):
+    from jassv2_spark.functions.codecs import CODECS
 
-    mod = importlib.import_module(f"jassv2_spark.functions.{module}")
-    encode, decode = getattr(mod, enc), getattr(mod, dec)
+    encode, decode = CODECS[name]
     for xs in fuzz_sequences(hash(name) % 1000, 60, max_bits=max_bits,
                              allow_zero=allow_zero):
         ref = ref_encode(codec_tool, name, xs)
@@ -261,63 +252,15 @@ def test_carry8b_bitwise_vs_reference(codec_tool):
 
 def test_full_codec_registry_roundtrip(codec_tool):
     """Audit: every codec in the reference's 26-entry registry
-    (`source/compress_integer_all.cpp:42-72`) now has a bit-exact Python
-    encoder+decoder, exercised here end-to-end on one shared sequence."""
-    from jassv2_spark.functions import (atire_codecs, bitpack, carryover12,
-                                        ed_simd, eg_simd, eg_simd_vb, elias,
-                                        qmx, qmx_improved, qmx_original,
-                                        relative10, simple_codecs,
-                                        simple_packed)
-    from jassv2_spark.functions.carry8b import carry8b_decode, carry8b_encode
+    (`source/compress_integer_all.cpp:42-72`) has a bit-exact Python
+    encoder+decoder in the codec table, exercised here end-to-end on one
+    shared sequence. The table's two ATIRE-only legacy entries are not in
+    the reference registry."""
+    from jassv2_spark.functions.codecs import CODECS
 
     rng = random.Random(53)
     xs = [rng.randint(1, 1 << 20) for _ in range(100)]
-    registry = {
-        "Carryover-12": (carryover12.carryover12_encode,
-                         lambda d, n: carryover12.carryover12_decode(d, n)),
-        "Carry-8b": (carry8b_encode, carry8b_decode),
-        "Elias delta": (elias.elias_delta_encode, elias.elias_delta_decode),
-        "Elias delta with bit instuctions (slow)":
-            (elias.elias_delta_bitwise_encode, elias.elias_delta_bitwise_decode),
-        "Group Elias Delta SIMD": (ed_simd.ed_simd_encode,
-                                   lambda d, n: ed_simd.ed_simd_decode(d, n)),
-        "Group Elias Gamma SIMD": (eg_simd.eg_simd_encode,
-                                   lambda d, n: eg_simd.eg_simd_decode(d, n)),
-        "Group Elias Delta SIMD with Variable Byte":
-            (eg_simd_vb.eg_simd_vb_encode, eg_simd_vb.eg_simd_vb_decode),
-        "Elias gamma": (elias.elias_gamma_encode, elias.elias_gamma_decode),
-        "Elias gamma with bit instuctions (slow)":
-            (elias.elias_gamma_bitwise_encode, elias.elias_gamma_bitwise_decode),
-        "None": (lambda v: b"".join(int(x).to_bytes(4, "little") for x in v),
-                 lambda d, n: [int.from_bytes(d[4 * i:4 * i + 4], "little")
-                               for i in range(n)]),
-        "Optimal Packed Simple-9": (simple_packed.simple9_packed_encode,
-                                    simple_packed.simple9_packed_decode),
-        "Optimal Packed Simple-16": (simple_packed.simple16_packed_encode,
-                                     simple_packed.simple16_packed_decode),
-        "Optimal Packed Simple-8b": (simple_packed.simple8b_packed_encode,
-                                     simple_packed.simple8b_packed_decode),
-        "Relative-10": (relative10.relative10_encode, relative10.relative10_decode),
-        "Simple-9": (simple_codecs.simple9_encode, simple_codecs.simple9_decode),
-        "Simple-16": (simple_codecs.simple16_encode, simple_codecs.simple16_decode),
-        "Simple-8b": (atire_codecs.simple8b_encode, atire_codecs.simple8b_decode),
-        "Variable Byte": (atire_codecs.vbyte_array_encode,
-                          atire_codecs.vbyte_array_decode),
-        "Stream VByte": (bitpack.stream_vbyte_encode, bitpack.stream_vbyte_decode),
-        "QMX Improved": (qmx_improved.qmx_improved_encode,
-                         qmx_improved.qmx_improved_decode),
-        "QMX Original": (qmx_original.qmx_original_encode,
-                         qmx_original.qmx_original_decode),
-        "QMX JASS v1": (qmx.qmx_encode, qmx.qmx_decode),
-        "Binpack into 128-bit SIMD integers": (bitpack.bitpack128_encode,
-                                               bitpack.bitpack128_decode),
-        "Binpack into 256-bit SIMD integers": (bitpack.bitpack256_encode,
-                                               bitpack.bitpack256_decode),
-        "Binpack into 32-bit integers with 8 selectors":
-            (bitpack.bitpack32_reduced_encode, bitpack.bitpack32_reduced_decode),
-        "Binpack into 64-bit integers": (bitpack.bitpack64_encode,
-                                         bitpack.bitpack64_decode),
-    }
+    registry = {name: codec for name, codec in CODECS.items() if "(ATIRE)" not in name}
     assert len(registry) == 26
     for name, (encode, decode) in registry.items():
         ref = ref_encode(codec_tool, name, xs)

@@ -114,15 +114,17 @@ def test_index_statistics(spark, ten_index):
 
 def test_index_space_audit_matches_real_codecs(spark, ten_index):
     """The audit's closed-form bit charges must equal what the actual
-    codecs in functions/compression.py produce on the same d-gapped
-    segments (vbyte exactly; gamma up to its end-of-stream byte padding)."""
-    import numpy as np
+    codecs in the codec table produce on the same d-gapped segments
+    (vbyte exactly; Elias gamma of g+1 up to its end-of-stream byte
+    padding)."""
     from collections import defaultdict
 
-    from jassv2_spark.functions.compression import (
-        delta_encode, gamma_encode, vbyte_encode,
-    )
+    from jassv2_spark.functions.codecs import CODECS
+    from jassv2_spark.functions.qmx import d1_encode
     from jassv2_spark.plans.export import index_space_audit
+
+    vbyte_encode = CODECS["Variable Byte"][0]
+    gamma_encode = CODECS["Elias gamma"][0]
 
     audit = {r["impact"]: r for r in index_space_audit(ten_index).collect()}
 
@@ -132,11 +134,11 @@ def test_index_space_audit_matches_real_codecs(spark, ten_index):
 
     exp = defaultdict(lambda: [0, 0, 0, 0])  # n, vbyte_bits, gamma_lo, gamma_hi
     for (term, impact), ids in segs.items():
-        gaps = delta_encode(np.array(sorted(ids), dtype=np.uint64))
+        gaps = d1_encode(sorted(ids))
         e = exp[impact]
         e[0] += len(ids)
         e[1] += 8 * len(vbyte_encode(gaps))
-        enc_bits = 8 * len(gamma_encode(gaps))
+        enc_bits = 8 * len(gamma_encode([g + 1 for g in gaps]))
         e[2] += enc_bits - 7  # encoder pads each segment to a byte boundary
         e[3] += enc_bits
 

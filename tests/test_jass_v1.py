@@ -8,6 +8,7 @@ whole chain — tokenizer, docid assignment, postings accumulation, impact
 ordering, iteration order, codec bit layout, file layout — byte for byte.
 """
 
+import hashlib
 import os
 
 import pytest
@@ -17,7 +18,7 @@ from jassv2_spark.functions.checksum import fletcher_16_file
 from jassv2_spark.functions.pearson import hash_8, hash_16, hash_24
 from jassv2_spark.functions.qmx import d1_decode, d1_encode, qmx_decode, qmx_encode
 from jassv2_spark.operators.build import build_index
-from jassv2_spark.plans.jass_v1 import (CODEX_UNCOMPRESSED, iteration_sort_key,
+from jassv2_spark.plans.jass_v1 import (_CODECS, CODEX_UNCOMPRESSED, iteration_sort_key,
                                         read_jass_v1, write_jass_v1)
 
 # `source/serialise_jass_v1.cpp:273-310`
@@ -26,6 +27,54 @@ GOLDEN_CHECKSUMS = {
     "CIvocab_terms.bin": 25057,
     "CIpostings.bin": 43058,
     "CIdoclist.bin": 3045,
+}
+
+# sha256 of the files `write_jass_v1` writes for ten_index, for every
+# codex in both layouts (v1, and v2 via version=2); generated before the
+# codec table existed. CIvocab_terms.bin and CIdoclist.bin do not depend
+# on the codex.
+GOLDEN_VOCAB_TERMS_SHA256 = "7644437a942c8a867ceacf43231863d55f403e85507c647a1438ceb67465cb61"
+GOLDEN_DOCLIST_SHA256 = {
+    1: "08540740996e06236978a7fe210535a2e2ceaf02c8b51db8615e05783c9c6ee5",
+    2: "204536b86b679fc23917010a48a9de9e937359706679da5bdb9c9579f337c342",
+}
+GOLDEN_FILE_SHA256 = {  # (version, codex) -> (CIpostings.bin, CIvocab.bin)
+    (1, "8"): ("0cbb59dfd0691fc14044f41ed7910fc04acce026eac8aebe840e5066dd793605",
+               "b748515da13dd384d70c202ce0307e33a5be88fc93f823f02486b45f7c8ffbd4"),
+    (1, "D"): ("dd51a28cd6322a464af790e88e4c41617d8a7d3b11a3c5026406a2abee34379b",
+               "fd8b028411f8a035603a6d34d24b1a4efd291854375fac6f4ba55030e4caa129"),
+    (1, "G"): ("4dfb174e5612038d8a42041043958024b4a24b0e94e1829305a631530ee62294",
+               "7dbb88f4836b3e49e1367f637b0949967dc793ec41b17db1021bb384ed06a7c6"),
+    (1, "Q"): ("d91262c2eafcdcb3e473d1b809350f4ccd799a979da079441c571557682b03cb",
+               "a740b9201e10989fd4eac23d22e6ce95b5a8cb300167554e09742979e901296a"),
+    (1, "R"): ("79d482da84bb5a0417c808b48051ff467961071574d5d8562e84389e5bbf2ff8",
+               "f4e2a5f7e465efea08a6c1db52721d977798de5ba14027907ebdbb6770385c11"),
+    (1, "c"): ("285136933768dad3da07b62e0df2c2123239bac1f58e76382daab965bd50ac91",
+               "e20479e0c4022b2c7710799deffcba0295eb61cb509a102f40c40d2721bf229d"),
+    (1, "g"): ("6198f5849305b48deca1ed92a66b1511760a28f7050340ac64706633005812f6",
+               "64b1892e30aca5ed75d5a98b1d60532b60d40b4e4c92ca8a03540e7bf2b76dca"),
+    (1, "q"): ("f790ce7a97e2f08ea32d875dfa87f91f222504a82d4146e8f163baf20bb3bc83",
+               "f4e2a5f7e465efea08a6c1db52721d977798de5ba14027907ebdbb6770385c11"),
+    (1, "s"): ("1a4866671ca7985fa2c2ed372ace0f5ae5b9d305c5ebc60c627c7ba3f4253116",
+               "4e28e61e47593183a7306058fc45b38dccc52cb3d232094d9576700e160947dc"),
+    (2, "8"): ("d39ca0d5ad2aeb51f201cfe70af3ff3b22a3b9b959d25ab2a86b9ee830cb1dec",
+               "0e5d8f1959ff32440d5df89d87942234994d62a583b2c4e853c7514358ac6d80"),
+    (2, "D"): ("d32200a20c9904991de31b8dcaf39a05d109886d57f4c925c4c488476e0807d6",
+               "24252cebaec2e71fe7e02a185ca6c2a8253316eedeaf3baefc8a6e1b46457bab"),
+    (2, "G"): ("f2cb587d6bdf5d441a218f7b4a64b7a28a6d0f3543d2a366508d0c26563ef57e",
+               "31f49d9a1a25335895d11b9321705d3a2ea42bda35b8066a272b0d5a6f11d7d6"),
+    (2, "Q"): ("7240dda37be9f37b59c5e54289462b0102e5ff45897f78d1494c4ce97d31fae6",
+               "826a8375ea5e799e0d27742a9749d6ee5540a808bedb42ae0f46ba2cfc74bc36"),
+    (2, "R"): ("4cd0cc7b96667e01337f5ebd608a456e9148843767b7d67d54a163082a62d224",
+               "1a7fabafe04beb11bc8d09153c0141631fa7a39022100a9cadfcf5ff96f4e31a"),
+    (2, "c"): ("53c0a932ed8f49d8058329c6592d1c7af77b3d5cf5f00c5fb837ea7a3549c864",
+               "869b86147d7a629342ea6e3f696f00c71cf112dbdde75450ad75d9d318bc6240"),
+    (2, "g"): ("233e38aff83751c8e7da5704b56a973935ac16558efe701726d28ecf7c3b60a3",
+               "cab2b2082f4c16e77e85e85230de8bb7e59308c4606470bab403d249b80fe3e4"),
+    (2, "q"): ("63563e83d34631ccb3e51342713046d28d5684979ac0547bd0d29b371aa2b7c9",
+               "1a7fabafe04beb11bc8d09153c0141631fa7a39022100a9cadfcf5ff96f4e31a"),
+    (2, "s"): ("2fb72537603863e9491892c2002e1d3024d83a8116580742c89e75bfd08bc0d3",
+               "793fd8ef586d80e2f3dc2cde45673280ec5cea1fdb06cd49d2037d9eeae40b91"),
 }
 
 
@@ -46,6 +95,32 @@ def test_golden_checksums(ten_index, tmp_path):
     assert info["n_terms"] == 20 and info["n_docs"] == 10
     for fname, want in GOLDEN_CHECKSUMS.items():
         assert fletcher_16_file(os.path.join(out, fname)) == want, fname
+
+
+def test_file_goldens_cover_every_codex():
+    assert {codex for _version, codex in GOLDEN_FILE_SHA256} == {chr(c) for c in _CODECS}
+    assert {version for version, _codex in GOLDEN_FILE_SHA256} == {1, 2}
+
+
+@pytest.mark.parametrize("version,codex", sorted(GOLDEN_FILE_SHA256))
+def test_codex_file_goldens(ten_index, tmp_path, version, codex):
+    """Every codex's files, v1 and v2, byte for byte: the file-level pin
+    for each codec wired into the serialiser (`_CODECS`), alignment, d1
+    convention and stale compression-buffer padding included."""
+    out = str(tmp_path / "ci")
+    write_jass_v1(ten_index, out, codex=ord(codex), version=version)
+    postings, vocab = GOLDEN_FILE_SHA256[(version, codex)]
+    want = {
+        "CIpostings.bin": postings,
+        "CIvocab.bin": vocab,
+        "CIvocab_terms.bin": GOLDEN_VOCAB_TERMS_SHA256,
+        "CIdoclist.bin": GOLDEN_DOCLIST_SHA256[version],
+    }
+    got = {}
+    for fname in want:
+        with open(os.path.join(out, fname), "rb") as f:
+            got[fname] = hashlib.sha256(f.read()).hexdigest()
+    assert got == want
 
 
 def test_iteration_order_matches_reference_unittest():

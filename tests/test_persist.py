@@ -188,6 +188,7 @@ def test_load_index_tables_roundtrip(spark, docs, tmp_path):
 def test_compressed_segment_store_roundtrip(spark, tmp_path):
     import pytest
 
+    from jassv2_spark.engine import Engine
     from jassv2_spark.fixtures import synthetic_corpus, synthetic_queries
     from jassv2_spark.operators.build import build_index
     from jassv2_spark.operators.search import search
@@ -199,11 +200,12 @@ def test_compressed_segment_store_roundtrip(spark, tmp_path):
     qdf = spark.createDataFrame(synthetic_queries(10), ["query_id", "query"])
     want = sorted(map(tuple, search(idx, qdf, k=10, with_keys=False).collect()))
 
-    for codec in ("vbyte", "qmx", "gamma"):
-        out = str(tmp_path / f"ix_{codec}")
+    for i, codec in enumerate(("Variable Byte", "QMX JASS v1", "Elias gamma")):
+        out = str(tmp_path / f"ix_{i}")
         save_index_tables(idx, out, codec=codec)
         loaded = load_index_tables(spark, out)
         assert "doc_ids" in loaded.segments.columns
+        assert Engine(loaded).get_encoding_scheme_name() == codec
         got = sorted(map(tuple, search(loaded, qdf, k=10, with_keys=False).collect()))
         assert got == want, codec
     idx.unpersist()
