@@ -120,15 +120,22 @@ def prune_index_doc_centric(index: Index, lam: int, cache: bool = True) -> Index
     Zipf-head group ever funnels into one task (the term-partitioned
     window that :func:`prune_index` deliberately avoids). Cost: one
     (doc)-keyed exchange for the window, one (term)-keyed partial-agg for
-    the pruned df, and the standard (term, impact, shard) regroup of
-    build_segments — the same shuffle shape as the original build's
-    segment pass, run once at build/publish time. Shard boundaries derive
-    from the PRUNED df, so the layout stays bitwise parallelism-independent.
+    the pruned df, and the build's own segment stage (build.py
+    `_segment_tables`, with the index's shard_size) — the same shuffle
+    shape as the original build's segment pass, run once at build/publish
+    time. Shard boundaries derive from the PRUNED df, so the layout stays
+    bitwise parallelism-independent.
     """
     if lam <= 0:
         raise ValueError(f"lam must be positive, got {lam}")
+    if index.impacts is None:
+        raise ValueError(
+            "doc-centric pruning reads the index's impacts table, which an "
+            "index loaded from disk (Engine.load / load_index_tables) lacks; "
+            "prune the in-memory index before saving it"
+        )
 
-    from jassv2_spark.operators.build import build_segments
+    from jassv2_spark.operators.build import _segment_tables
 
     w = Window.partitionBy("doc_id").orderBy(
         F.col("impact").desc(), F.col("term").asc()
@@ -140,32 +147,13 @@ def prune_index_doc_centric(index: Index, lam: int, cache: bool = True) -> Index
         .drop("rn")
     )
     dfp = kept.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    pruned = build_segments(kept.join(dfp, "term"), index.n_docs)
-    if "term_bucket" in index.segments.columns:
-        from jassv2_spark.plans.persist import N_TERM_BUCKETS
-
-        n_buckets = index.n_term_buckets or N_TERM_BUCKETS
-        pruned = pruned.withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-        )
-    if cache:
-        pruned = pruned.persist()
-
-    seg_stats = pruned.groupBy("term", "impact").agg(
-        F.sum("part_freq").alias("seg_freq")
+    segments, seg_stats, term_stats = _segment_tables(
+        kept.join(dfp, "term"), index.n_docs, index.conf, cache
     )
-    term_stats = seg_stats.groupBy("term").agg(
-        F.sum("seg_freq").alias("df"),
-        F.max("impact").alias("max_impact"),
-        F.count(F.lit(1)).alias("n_segments"),
-    )
-    if cache:
-        seg_stats = seg_stats.persist()
-
     return replace(
         index,
         impacts=kept,
-        segments=pruned,
+        segments=segments,
         seg_stats=seg_stats,
         term_stats=term_stats,
     )

@@ -121,18 +121,18 @@ def package_index(index: Index, path: str | None = None, n_shards: int | None = 
         path = path[: -len(".npy")] if path.endswith(".npy") else path
         os.makedirs(path, exist_ok=True)
     if n_shards is None:
-        # DATA-sized, not cluster-sized: the bucket count is a physical
-        # layout property of the package and must not change with the
-        # parallelism of the session that happens to build it — otherwise
-        # two clusters building the same corpus produce different serving
-        # layouts (and an N vs 4N scaling comparison measures layout +
-        # parallelism instead of parallelism alone; measured: a 1-bucket
-        # package serves ~11% faster per query at 1 core than a 32-bucket
-        # one, which alone depresses an N→4N ratio by that margin).
-        # ~0.5M postings (4 MB of int64 docids) per bucket, capped at 4096
-        # buckets (at 10^12 postings the cap gives ~2 GB/bucket — the
-        # coarse unit of serving distribution; the floor keeps the package
-        # WRITE at full parallelism on small corpora). Finer buckets also
+        # DATA-sized above a cluster-sized floor: ~0.5M postings (4 MB of
+        # int64 docids) per bucket, capped at 4096 buckets (at 10^12
+        # postings the cap gives ~2 GB/bucket — the coarse unit of serving
+        # distribution). Below ~0.5M postings per default-parallelism slot
+        # the floor `defaultParallelism` sets the count instead, so a
+        # small corpus's layout DOES change with the parallelism of the
+        # session that builds it (the floor keeps the package WRITE at full
+        # parallelism). The layout matters to an N vs 4N scaling
+        # comparison: measured, a 1-bucket package serves ~11% faster per
+        # query at 1 core than a 32-bucket one, so packages built under
+        # different parallelism compare layout + parallelism, not
+        # parallelism alone. Finer buckets also
         # measure FASTER under concurrent serving: per-query kernel time
         # over a 32-bucket package is flat from 1 to 4 workers (21.0 →
         # 21.1 ms/q) while a 1-bucket package degrades 25% (18.9 → 23.6)

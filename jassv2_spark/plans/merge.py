@@ -17,15 +17,22 @@ impacts, same segment table (verified in tests/test_merge.py). This is NOT
 true of merging at the quantized-segment level (quantization min/max and
 idf are collection-global), which is why the merge runs from counts.
 
-Entry points:
-  - ``merge_indexes``    — in-memory ``Index`` shards → merged ``Index``.
-  - ``merge_build_dirs`` — persisted build dirs (plans/persist.py layout)
-    → a new persisted build dir; itself checkpoint-resumable, because it
-    seeds the target's ``doc_map``/``counts`` stages and then resumes the
-    ordinary stage chain.
-  - ``delete_docs`` / ``add_docs`` — incremental maintenance (takedowns,
-    recrawl appends) with the same counts-level exactness guarantee; the
-    reference has no mutation path at all (its serialized index is final).
+Entry points, in-memory (every one rebuilds from the retained ``counts``
+base, which an index built with ``cache=False`` or loaded from disk lacks):
+  - ``merge_indexes`` — ``Index`` shards → merged ``Index``.
+  - ``delete_docs`` / ``add_docs`` / ``update_docs`` — incremental
+    maintenance (takedowns, recrawl appends, upserts by key) with the same
+    counts-level exactness guarantee; the reference has no mutation path
+    at all (its serialized index is final).
+
+Entry points, persisted (plans/persist.py layout), the twins of
+``merge_indexes`` and ``delete_docs``:
+  - ``merge_build_dirs`` / ``delete_docs_build_dir`` — build dirs → a new
+    build dir. Each hands its merged or anti-joined ``doc_map``/``counts``
+    to persist's seeded build, the one path that writes those two stages
+    from given frames (streaming finalize uses it too) and then runs the
+    same post-counts chain as a direct build, so the result is
+    kill-and-resume safe and carries the same per-stage lineage/metrics.
 
 Doc-id handling: with ``rekey=False`` (default) shard doc_ids are trusted
 to be globally unique (caller-assigned, e.g. disjoint id ranges per shard).
@@ -36,22 +43,23 @@ assign, since ids are the dense rank of the key (sources/docids.py).
 
 from __future__ import annotations
 
-import json
 import os
-import time
+from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jassv2_spark.operators.build import BuildConf, Index, build_index_from_counts
+from jassv2_spark.plans.persist import _read_stats, _seeded_build, stage_done
 from jassv2_spark.sources.docids import assign_doc_ids
 
 
-def _check_compatible(confs: list[tuple]) -> None:
+def _check_compatible(confs: list[BuildConf]) -> None:
     """All shards must share the scoring/tokenizer configuration — merging
     shards tokenized or scored differently is silent corruption."""
-    first = confs[0]
-    for i, c in enumerate(confs[1:], start=1):
+    first, *rest = [(c.k1, c.b, c.tokenizer, c.stem) for c in confs]
+    for i, c in enumerate(rest, start=1):
         if c != first:
             raise ValueError(
                 f"shard {i} build conf {c} differs from shard 0 {first}; "
@@ -59,8 +67,43 @@ def _check_compatible(confs: list[tuple]) -> None:
             )
 
 
+def _counts_base(index: Index, name: str = "index") -> DataFrame:
+    """The unquantized ``(doc_id, term, cnt, dl)`` base every in-memory
+    maintenance operation rebuilds from; quantized impacts alone cannot be
+    rebuilt (collection-global min/max and idf shift)."""
+    if index.counts is None:
+        raise ValueError(
+            f"{name} has no counts table: it was built with cache=False or "
+            "loaded from disk (Engine.load / load_index_tables). Rebuild it "
+            "with cache=True, or maintain its persisted build dir with "
+            "delete_docs_build_dir / merge_build_dirs"
+        )
+    return index.counts.select("doc_id", "term", "cnt", "dl")
+
+
+def _id_set(spark: SparkSession, doc_ids) -> DataFrame:
+    """``doc_ids`` (a DataFrame whose first column is the id, or an iterable
+    of ints) as a broadcast distinct ``doc_id`` frame, so an anti-join
+    against it is map-side."""
+    if isinstance(doc_ids, DataFrame):
+        ids = doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
+    else:
+        ids = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id bigint")
+    return F.broadcast(ids.distinct())
+
+
+def _union_shards(
+    counts: Sequence[DataFrame], doc_maps: Sequence[DataFrame], map_cols: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """The plain shard union of counts and of the doc_maps' ``map_cols``."""
+    return (
+        reduce(DataFrame.unionByName, counts),
+        reduce(DataFrame.unionByName, [m.select(*map_cols) for m in doc_maps]),
+    )
+
+
 def _rekey(
-    counts: list[DataFrame], doc_maps: list[DataFrame], num_partitions: int | None
+    counts: Sequence[DataFrame], doc_maps: Sequence[DataFrame], num_partitions: int | None
 ) -> tuple[DataFrame, DataFrame]:
     """Assign new dense global doc_ids by key order over the union and remap
     every shard's counts onto them. Matches the ids a single-shot build of
@@ -69,17 +112,24 @@ def _rekey(
         c.join(m.select("doc_id", "key"), "doc_id").drop("doc_id")
         for c, m in zip(counts, doc_maps)
     ]
-    all_keyed = keyed[0]
-    for k in keyed[1:]:
-        all_keyed = all_keyed.unionByName(k)
-    all_keys = doc_maps[0].select("key")
-    for m in doc_maps[1:]:
-        all_keys = all_keys.unionByName(m.select("key"))
+    all_keyed, all_keys = _union_shards(keyed, doc_maps, ["key"])
     new_ids = assign_doc_ids(
         all_keys, key_col="key", out_col="doc_id", num_partitions=num_partitions
     )
     merged_counts = all_keyed.join(new_ids, "key").drop("key")
     return merged_counts, new_ids.select("doc_id", "key")
+
+
+def _read_seeds(spark: SparkSession, build_dir: str, name: str) -> tuple[DataFrame, DataFrame]:
+    """A persisted build dir's ``doc_map`` and ``counts`` stages, in the
+    columns a seeded build takes."""
+    for stage in ("doc_map", "counts"):
+        if not stage_done(build_dir, stage):
+            raise ValueError(f"{name} {build_dir} lacks completed stage {stage!r}")
+    return (
+        spark.read.parquet(os.path.join(build_dir, "doc_map")).select("doc_id", "key", "text"),
+        spark.read.parquet(os.path.join(build_dir, "counts")).select("doc_id", "term", "cnt"),
+    )
 
 
 def merge_indexes(
@@ -98,30 +148,18 @@ def merge_indexes(
     """
     if not shards:
         raise ValueError("no shards to merge")
-    for i, s in enumerate(shards):
-        if s.counts is None:
-            raise ValueError(
-                f"shard {i} has no counts table (built with cache=False?); "
-                "merge needs the unquantized counts base"
-            )
-    _check_compatible(
-        [(s.conf.k1, s.conf.b, s.conf.tokenizer, s.conf.stem) for s in shards]
-    )
+    counts = [_counts_base(s, f"shard {i}") for i, s in enumerate(shards)]
+    _check_compatible([s.conf for s in shards])
     conf = conf or shards[0].conf
 
-    counts = [s.counts.select("doc_id", "term", "cnt", "dl") for s in shards]
+    doc_maps = [s.doc_map for s in shards]
     if rekey:
         merged_counts, doc_map = _rekey(
-            counts, [s.doc_map for s in shards],
+            counts, doc_maps,
             conf.num_partitions or shards[0].spark.sparkContext.defaultParallelism,
         )
     else:
-        merged_counts = counts[0]
-        for c in counts[1:]:
-            merged_counts = merged_counts.unionByName(c)
-        doc_map = shards[0].doc_map.select("doc_id", "key")
-        for s in shards[1:]:
-            doc_map = doc_map.unionByName(s.doc_map.select("doc_id", "key"))
+        merged_counts, doc_map = _union_shards(counts, doc_maps, ["doc_id", "key"])
 
     # integer sums are associative: Σ over the union == Σ of shard sums
     n_docs = sum(s.n_docs for s in shards)
@@ -155,22 +193,8 @@ def delete_docs(
     of ints. The id set is broadcast: the anti-join is map-side, so the one
     full pass over counts has no shuffle. Unknown ids are ignored.
     """
-    if index.counts is None:
-        raise ValueError(
-            "index has no counts table (built with cache=False?); "
-            "delete needs the unquantized counts base"
-        )
-    spark = index.spark
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
-    else:
-        ids = spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id bigint"
-        )
-    ids = F.broadcast(ids.distinct())
-    new_counts = index.counts.select("doc_id", "term", "cnt", "dl").join(
-        ids, "doc_id", "left_anti"
-    )
+    ids = _id_set(index.spark, doc_ids)
+    new_counts = _counts_base(index).join(ids, "doc_id", "left_anti")
     new_map = index.doc_map.join(ids, "doc_id", "left_anti")
     n_docs = new_map.count()
     return build_index_from_counts(
@@ -264,46 +288,14 @@ def delete_docs_build_dir(
     broadcast id set and re-seeded, then the ordinary checkpoint chain
     resumes (same exactness argument as :func:`delete_docs`; same
     kill-and-resume safety and per-stage lineage as a direct build)."""
-    from jassv2_spark.plans.persist import (
-        _mark,
-        _write_stage,
-        build_index_persisted,
-        stage_done,
-    )
-
-    for stage in ("doc_map", "counts"):
-        if not stage_done(src_dir, stage):
-            raise ValueError(f"source {src_dir} lacks completed stage {stage!r}")
-    if conf is None:
-        with open(os.path.join(src_dir, "stats.json")) as f:
-            s0 = json.load(f)
-        conf = BuildConf(k1=s0["k1"], b=s0["b"], tokenizer=s0["tokenizer"], stem=s0["stem"])
-
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
-    else:
-        ids = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id bigint")
-    ids = F.broadcast(ids.distinct())
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not (stage_done(out_dir, "doc_map") and stage_done(out_dir, "counts")):
-        doc_map = spark.read.parquet(os.path.join(src_dir, "doc_map"))
-        counts = spark.read.parquet(os.path.join(src_dir, "counts"))
-        t0 = time.perf_counter()
-        _write_stage(
-            doc_map.join(ids, "doc_id", "left_anti"), out_dir, "doc_map",
-            lineage_key="doc_id", extra={"deleted_from": src_dir},
-        )
-        _write_stage(
-            counts.select("doc_id", "term", "cnt").join(ids, "doc_id", "left_anti"),
-            out_dir, "counts", lineage_key="term", extra={"deleted_from": src_dir},
-        )
-        _mark(out_dir, "delete_seed", 0, time.perf_counter() - t0,
-              {"src_dir": src_dir})
-
-    docs = spark.read.parquet(os.path.join(out_dir, "doc_map"))
-    return build_index_persisted(
-        docs, out_dir, text_col="text", key_col="key", conf=conf
+    doc_map, counts = _read_seeds(spark, src_dir, "source")
+    ids = _id_set(spark, doc_ids)
+    return _seeded_build(
+        out_dir,
+        doc_map.join(ids, "doc_id", "left_anti"),
+        counts.join(ids, "doc_id", "left_anti"),
+        conf or _read_stats(src_dir)[1],
+        {"deleted_from": src_dir},
     )
 
 
@@ -323,62 +315,23 @@ def merge_build_dirs(
     ordinary checkpoint chain — so the merge is itself kill-and-resume safe
     and emits the same per-stage lineage/metrics as a direct build.
     """
-    from jassv2_spark.plans.persist import (
-        _mark,
-        _write_stage,
-        build_index_persisted,
-        stage_done,
-    )
-
     if not shard_dirs:
         raise ValueError("no shard dirs to merge")
-    shard_stats = []
-    for d in shard_dirs:
-        for stage in ("doc_map", "counts"):
-            if not stage_done(d, stage):
-                raise ValueError(f"shard {d} lacks completed stage {stage!r}")
-        with open(os.path.join(d, "stats.json")) as f:
-            shard_stats.append(json.load(f))
-    _check_compatible(
-        [(s["k1"], s["b"], s["tokenizer"], s["stem"]) for s in shard_stats]
-    )
-    if conf is None:
-        s0 = shard_stats[0]
-        conf = BuildConf(k1=s0["k1"], b=s0["b"], tokenizer=s0["tokenizer"], stem=s0["stem"])
+    doc_maps, counts = zip(*(_read_seeds(spark, d, "shard") for d in shard_dirs))
+    confs = [_read_stats(d)[1] for d in shard_dirs]
+    _check_compatible(confs)
 
-    os.makedirs(out_dir, exist_ok=True)
-    doc_maps = [spark.read.parquet(os.path.join(d, "doc_map")) for d in shard_dirs]
-    counts = [spark.read.parquet(os.path.join(d, "counts")) for d in shard_dirs]
-
-    if not (stage_done(out_dir, "doc_map") and stage_done(out_dir, "counts")):
-        if rekey:
-            merged_counts, new_map = _rekey(
-                counts, doc_maps, spark.sparkContext.defaultParallelism
-            )
-            texts = doc_maps[0].select("key", "text")
-            for m in doc_maps[1:]:
-                texts = texts.unionByName(m.select("key", "text"))
-            merged_map = new_map.join(texts, "key").select("doc_id", "key", "text")
-        else:
-            merged_map = doc_maps[0].select("doc_id", "key", "text")
-            for m in doc_maps[1:]:
-                merged_map = merged_map.unionByName(m.select("doc_id", "key", "text"))
-            merged_counts = counts[0].select("doc_id", "term", "cnt")
-            for c in counts[1:]:
-                merged_counts = merged_counts.unionByName(c.select("doc_id", "term", "cnt"))
-        t0 = time.perf_counter()
-        _write_stage(merged_map, out_dir, "doc_map", lineage_key="doc_id",
-                     extra={"merged_from": shard_dirs})
-        _write_stage(merged_counts.select("doc_id", "term", "cnt"), out_dir, "counts",
-                     lineage_key="term", extra={"merged_from": shard_dirs})
-        _mark(out_dir, "merge_seed", len(shard_dirs), time.perf_counter() - t0,
-              {"shard_dirs": shard_dirs, "rekey": rekey})
-
-    # resume the standard chain from doc_lengths onward; the docs argument
-    # is never scanned (doc_map/counts stages are already checkpointed)
-    docs = spark.read.parquet(os.path.join(out_dir, "doc_map"))
-    return build_index_persisted(
-        docs, out_dir, text_col="text", key_col="key", conf=conf
+    if rekey:
+        merged_counts, new_map = _rekey(
+            counts, doc_maps, spark.sparkContext.defaultParallelism
+        )
+        texts = reduce(DataFrame.unionByName, [m.select("key", "text") for m in doc_maps])
+        merged_map = new_map.join(texts, "key")
+    else:
+        merged_counts, merged_map = _union_shards(counts, doc_maps, ["doc_id", "key", "text"])
+    return _seeded_build(
+        out_dir, merged_map, merged_counts, conf or confs[0],
+        {"merged_from": shard_dirs, "rekey": rekey},
     )
 
 

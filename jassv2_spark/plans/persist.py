@@ -12,6 +12,11 @@ skipping exactly the stages whose completion markers exist:
   segments     impact-ordered shard rows, term-bucket-partitioned
   seg_stats / term_stats
 
+A merge, a takedown or a stream snapshot (plans/merge.py,
+streaming/incremental.py) enters as a seeded build: its doc_map and counts
+frames are written as the first two stages and the rest of the chain is
+the one above.
+
 ``stats.json`` (N, collection length, mean dl, quantization min/max, build
 conf) is written before the table stages. Per stage: parquet data,
 `_checkpoints/<stage>.json` marker (rows, wall sec), `_lineage/<stage>/`
@@ -177,30 +182,67 @@ def build_index_persisted(
         )
         _write_stage(doc_map_full, out_dir, "doc_map", lineage_key="doc_id")
     _chk("doc_map")
-    doc_map_full = spark.read.parquet(os.path.join(out_dir, "doc_map"))
 
     # -- stage: counts (the build's counting pass) -------------------------
     if not stage_done(out_dir, "counts"):
+        doc_map_full = spark.read.parquet(os.path.join(out_dir, "doc_map"))
         counts = count_terms(doc_map_full, text_col="text", doc_id_col="doc_id", conf=conf)
         _write_stage(counts, out_dir, "counts", lineage_key="term")
     _chk("counts")
 
     # -- stages: scoring + index tables (build_index_from_counts) ---------
+    return _build_from_counts(spark, out_dir, conf, after=_chk)
+
+
+def _build_from_counts(
+    spark: SparkSession,
+    out_dir: str,
+    conf: BuildConf,
+    after: Callable[[str], None] = lambda stage: None,
+) -> Index:
+    """The stages after ``counts``: score and quantize the checkpointed
+    doc_map/counts (build_index_from_counts), write the index tables,
+    skipping those already complete, and load the result."""
     if not all(stage_done(out_dir, s) for s in STAGES[2:]):
         with open(_marker_path(out_dir, "doc_map")) as f:
             n_docs = int(json.load(f)["rows"])
         index = build_index_from_counts(
             spark.read.parquet(os.path.join(out_dir, "counts")),
-            doc_map_full.select("doc_id", "key"),
+            spark.read.parquet(os.path.join(out_dir, "doc_map")).select("doc_id", "key"),
             n_docs,
             conf=conf,
         )
         try:
-            _write_index_tables(index, out_dir, resume=True, after=_chk)
+            _write_index_tables(index, out_dir, resume=True, after=after)
         finally:
             index.unpersist()
 
     return load_index_tables(spark, out_dir, conf=conf)
+
+
+def _seeded_build(
+    out_dir: str, doc_map: DataFrame, counts: DataFrame, conf: BuildConf, extra: dict
+) -> Index:
+    """A persisted build whose ``doc_map`` (doc_id, key, text) and ``counts``
+    (doc_id, term, cnt) stages are given rather than tokenized: a merge, a
+    takedown or a stream snapshot. The seeds are written once, with
+    ``extra`` as provenance in their markers; a rerun finds both markers
+    and resumes the ordinary chain where it stopped."""
+    os.makedirs(out_dir, exist_ok=True)
+    if not (stage_done(out_dir, "doc_map") and stage_done(out_dir, "counts")):
+        _write_stage(doc_map.select("doc_id", "key", "text"), out_dir, "doc_map",
+                     lineage_key="doc_id", extra=extra)
+        _write_stage(counts.select("doc_id", "term", "cnt"), out_dir, "counts",
+                     lineage_key="term", extra=extra)
+    return _build_from_counts(doc_map.sparkSession, out_dir, conf)
+
+
+def _read_stats(out_dir: str) -> tuple[dict, BuildConf]:
+    """A build dir's ``stats.json`` and the BuildConf it was built with."""
+    with open(os.path.join(out_dir, "stats.json")) as f:
+        stats = json.load(f)
+    recorded = {k: stats[k] for k in ("k1", "b", "tokenizer", "stem") if k in stats}
+    return stats, BuildConf(**recorded)
 
 
 def _write_index_tables(
@@ -321,16 +363,10 @@ def save_index_tables(index: Index, out_dir: str, codec: str | None = None) -> N
 
 
 def load_index_tables(spark: SparkSession, out_dir: str, conf: BuildConf | None = None) -> Index:
-    with open(os.path.join(out_dir, "stats.json")) as f:
-        stats = json.load(f)
+    stats, recorded = _read_stats(out_dir)
     codec = stats.get("codec")
     _check_codec(codec, os.path.join(out_dir, "stats.json"))
-    conf = conf or BuildConf(
-        k1=stats.get("k1", 0.9),
-        b=stats.get("b", 0.4),
-        tokenizer=stats.get("tokenizer", "parity"),
-        stem=stats.get("stem", False),
-    )
+    conf = conf or recorded
     segments = spark.read.parquet(os.path.join(out_dir, "segments"))
     conf.codec = codec  # surfaced via Engine.get_encoding_scheme_name()
     if codec is not None and "doc_ids_enc" in segments.columns:

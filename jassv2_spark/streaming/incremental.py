@@ -100,35 +100,28 @@ def finalize(spark: SparkSession, out_dir: str, conf: BuildConf | None = None):
     """Close the current snapshot: quantize + segment the streamed counts.
 
     Feeds the snapshot into the checkpointed batch pipeline
-    (plans/persist.py) as its pre-built "counts"/"doc_map" stages, so every
-    downstream stage (doc lengths → scoring → segments → vocab metadata) is
-    the SAME code the batch build runs. Rerunnable; each finalize rebuilds the
-    snapshot's quantization (global min/max must see everything). The
-    build uses the tokenizer and stem setting the stream counted with;
-    a `conf` that names others raises ValueError."""
+    (plans/persist.py) as a seeded build: the snapshot's "counts" and
+    "doc_map" become those stages, so every downstream stage (doc lengths →
+    scoring → segments → vocab metadata) is the SAME code the batch build
+    runs. Rerunnable; each finalize rebuilds the snapshot's quantization
+    (global min/max must see everything). The build uses the tokenizer and
+    stem setting the stream counted with; a `conf` that names others
+    raises ValueError."""
     import shutil
 
-    from jassv2_spark.plans import persist as P
+    from jassv2_spark.plans.persist import _seeded_build
 
     conf = _stream_conf(out_dir, conf)
 
     final_dir = os.path.join(out_dir, "final")
-    if os.path.isdir(final_dir):
-        shutil.rmtree(final_dir)
-    os.makedirs(final_dir, exist_ok=True)
+    shutil.rmtree(final_dir, ignore_errors=True)
 
-    streamed = spark.read.parquet(os.path.join(out_dir, "counts_stream"))
+    stream_dir = os.path.join(out_dir, "counts_stream")
+    streamed = spark.read.parquet(stream_dir)
     # collapse multi-batch arrivals (a doc re-sent across batches sums)
     counts = streamed.groupBy("doc_id", "term").agg(F.sum("cnt").alias("cnt"))
-    P._write_stage(counts, final_dir, "counts", lineage_key="term")
     doc_map = counts.select("doc_id").distinct().select(
         "doc_id", F.col("doc_id").cast("string").alias("key"),
         F.lit(None).cast("string").alias("text"),
     )
-    P._write_stage(doc_map, final_dir, "doc_map", lineage_key="doc_id")
-
-    # docs arg is unused once doc_map+counts stages exist; pass doc_map
-    return P.build_index_persisted(
-        doc_map, final_dir, text_col="text", key_col="key", doc_id_col="doc_id",
-        conf=conf,
-    )
+    return _seeded_build(final_dir, doc_map, counts, conf, {"streamed_from": stream_dir})

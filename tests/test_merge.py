@@ -22,13 +22,32 @@ from jassv2_spark.plans.merge import (
 from jassv2_spark.plans.persist import build_index_persisted, stage_done
 
 
-@pytest.fixture()
+@pytest.fixture(scope="module")
 def corpus(spark):
     rows = synthetic_corpus(180)
     return spark.createDataFrame(
         [(i + 1, r["url"], r["text"]) for i, r in enumerate(rows)],
         ["doc_id", "url", "text"],
     )
+
+
+@pytest.fixture(scope="module")
+def build_dirs(spark, corpus, tmp_path_factory):
+    """Persisted builds of the corpus's even docs ("a"), odd docs ("b") and
+    all docs ("d"), shared by the build-dir tests; each test writes only
+    its own output dirs. Maps name → (dir, loaded index)."""
+    root = tmp_path_factory.mktemp("build_dirs")
+    out = {}
+    for name, frame in (
+        ("a", corpus.filter(F.col("doc_id") % 2 == 0)),
+        ("b", corpus.filter(F.col("doc_id") % 2 == 1)),
+        ("d", corpus),
+    ):
+        out[name] = (str(root / name), build_index_persisted(
+            frame, str(root / name), text_col="text", key_col="doc_id",
+            doc_id_col="doc_id",
+        ))
+    return out
 
 
 def _segments_sorted(idx):
@@ -158,14 +177,11 @@ def test_merge_requires_counts(spark, corpus):
         merge_indexes([a])
 
 
-def test_delete_build_dir_equals_direct_persisted(spark, corpus, tmp_path):
-    build_index_persisted(corpus, str(tmp_path / "src"), text_col="text",
-                          key_col="doc_id", doc_id_col="doc_id")
+def test_delete_build_dir_equals_direct_persisted(spark, corpus, build_dirs, tmp_path):
+    src = build_dirs["d"][0]  # the whole corpus
     doomed = [r[0] for r in corpus.select("doc_id")
               .filter(F.col("doc_id") % 4 == 0).collect()]
-    after = delete_docs_build_dir(
-        spark, str(tmp_path / "src"), str(tmp_path / "del"), doomed
-    )
+    after = delete_docs_build_dir(spark, src, str(tmp_path / "del"), doomed)
     direct = build_index_persisted(
         corpus.filter(F.col("doc_id") % 4 != 0), str(tmp_path / "d2"),
         text_col="text", key_col="doc_id", doc_id_col="doc_id",
@@ -176,24 +192,14 @@ def test_delete_build_dir_equals_direct_persisted(spark, corpus, tmp_path):
     queries = synthetic_queries(6)
     assert _topk(after, spark, queries) == _topk(direct, spark, queries)
     # the seeded stages are checkpointed: re-running resumes, same index
-    again = delete_docs_build_dir(
-        spark, str(tmp_path / "src"), str(tmp_path / "del"), doomed
-    )
+    again = delete_docs_build_dir(spark, src, str(tmp_path / "del"), doomed)
     assert _segments_sorted(again) == _segments_sorted(direct)
 
 
-def test_merge_build_dirs_equals_direct_persisted(spark, corpus, tmp_path):
-    even = corpus.filter(F.col("doc_id") % 2 == 0)
-    odd = corpus.filter(F.col("doc_id") % 2 == 1)
-    build_index_persisted(even, str(tmp_path / "a"), text_col="text",
-                          key_col="doc_id", doc_id_col="doc_id")
-    build_index_persisted(odd, str(tmp_path / "b"), text_col="text",
-                          key_col="doc_id", doc_id_col="doc_id")
-    merged = merge_build_dirs(
-        spark, [str(tmp_path / "a"), str(tmp_path / "b")], str(tmp_path / "m")
-    )
-    direct = build_index_persisted(corpus, str(tmp_path / "d"), text_col="text",
-                                   key_col="doc_id", doc_id_col="doc_id")
+def test_merge_build_dirs_equals_direct_persisted(spark, build_dirs, tmp_path):
+    shards = [build_dirs["a"][0], build_dirs["b"][0]]  # even and odd docs
+    merged = merge_build_dirs(spark, shards, str(tmp_path / "m"))
+    direct = build_dirs["d"][1]
 
     assert merged.n_docs == direct.n_docs
     assert (merged.min_rsv, merged.max_rsv) == (direct.min_rsv, direct.max_rsv)
@@ -204,10 +210,99 @@ def test_merge_build_dirs_equals_direct_persisted(spark, corpus, tmp_path):
     for stage in ("doc_map", "counts", "segments"):
         assert stage_done(str(tmp_path / "m"), stage)
     # rerunning the merge is a no-op resume (markers untouched → same index)
-    again = merge_build_dirs(
-        spark, [str(tmp_path / "a"), str(tmp_path / "b")], str(tmp_path / "m")
-    )
+    again = merge_build_dirs(spark, shards, str(tmp_path / "m"))
     assert _segments_sorted(again) == _segments_sorted(direct)
+
+
+def test_merge_build_dirs_rekey_equals_direct_persisted(spark, corpus, tmp_path):
+    # shards built with doc_id_col=None each assign their OWN dense ids by
+    # url, so raw ids collide; rekey=True re-ranks over the union
+    docs = corpus.select("url", "text")
+    half_a = docs.filter(F.substring(F.xxhash64("url").cast("string"), -1, 1).isin(
+        *"02468"))
+    half_b = docs.subtract(half_a)
+    build_index_persisted(half_a, str(tmp_path / "a"), text_col="text", key_col="url")
+    build_index_persisted(half_b, str(tmp_path / "b"), text_col="text", key_col="url")
+    merged = merge_build_dirs(
+        spark, [str(tmp_path / "a"), str(tmp_path / "b")], str(tmp_path / "m"),
+        rekey=True,
+    )
+    direct = build_index_persisted(docs, str(tmp_path / "d"), text_col="text",
+                                   key_col="url")
+
+    assert merged.n_docs == direct.n_docs
+    assert (merged.min_rsv, merged.max_rsv) == (direct.min_rsv, direct.max_rsv)
+    assert _segments_sorted(merged) == _segments_sorted(direct)
+    queries = synthetic_queries(6)
+    assert _topk(merged, spark, queries) == _topk(direct, spark, queries)
+    assert sorted(map(tuple, merged.doc_map.collect())) == sorted(
+        map(tuple, direct.doc_map.collect())
+    )
+
+
+def test_build_dir_ops_resume_after_kill(spark, corpus, build_dirs, tmp_path, monkeypatch):
+    # a merge and a takedown killed while writing `segments` resume on rerun
+    # without rewriting their seed stages, and equal the direct build
+    from jassv2_spark.plans import persist
+
+    armed = []
+    real_write_stage = persist._write_stage
+
+    def killed_at_segments(df, out_dir, stage, *args, **kwargs):
+        if stage == "segments" and armed:
+            armed.pop()
+            raise RuntimeError("killed while writing segments")
+        return real_write_stage(df, out_dir, stage, *args, **kwargs)
+
+    monkeypatch.setattr(persist, "_write_stage", killed_at_segments)
+
+    def seed_times(out_dir):
+        m = persist.build_metrics(out_dir)
+        return [m[s]["finished_at"] for s in ("doc_map", "counts")]
+
+    shards = [build_dirs["a"][0], build_dirs["b"][0]]
+    odd_ids = [r[0] for r in corpus.select("doc_id")
+               .filter(F.col("doc_id") % 2 == 1).collect()]
+    for run, out, want in (
+        (lambda: merge_build_dirs(spark, shards, str(tmp_path / "m")),
+         str(tmp_path / "m"), build_dirs["d"][1]),
+        (lambda: delete_docs_build_dir(spark, build_dirs["d"][0],
+                                       str(tmp_path / "del"), odd_ids),
+         str(tmp_path / "del"), build_dirs["a"][1]),
+    ):
+        armed.append(True)
+        with pytest.raises(RuntimeError, match="killed"):
+            run()
+        assert not stage_done(out, "segments")
+        seeded = seed_times(out)
+        again = run()
+        assert seed_times(out) == seeded
+        assert again.n_docs == want.n_docs
+        assert (again.min_rsv, again.max_rsv) == (want.min_rsv, want.max_rsv)
+        assert _segments_sorted(again) == _segments_sorted(want)
+        queries = synthetic_queries(6)
+        assert _topk(again, spark, queries) == _topk(want, spark, queries)
+
+
+def test_maintenance_of_loaded_index_names_the_cause(spark, corpus, build_dirs):
+    # a loaded index has no counts base: every in-memory maintenance call
+    # says so, and points at the build-dir operations
+    from jassv2_spark.engine import Engine
+    from jassv2_spark.plans.merge import update_docs
+
+    loaded = Engine.load(spark, build_dirs["d"][0]).index
+    new = corpus.filter(F.col("doc_id") <= 2)
+    for op in (
+        lambda: delete_docs(loaded, [1]),
+        lambda: merge_indexes([loaded]),
+        lambda: add_docs(loaded, new, text_col="text", key_col="doc_id",
+                         doc_id_col="doc_id"),
+        lambda: update_docs(loaded, new, text_col="text", key_col="doc_id"),
+    ):
+        with pytest.raises(ValueError, match="loaded") as err:
+            op()
+        assert "counts" in str(err.value)
+        assert "delete_docs_build_dir" in str(err.value)
 
 
 def test_vocab_diff_hand_checked(spark):

@@ -148,3 +148,29 @@ def test_doc_centric_engine_facade_serves(spark, idx):
     assert served
     kept_docs = {d for _, _, d in _postings(cut.index)}
     assert all(r["doc_id"] in kept_docs for r in served)
+
+
+def test_doc_centric_honours_shard_size(spark, idx):
+    from dataclasses import replace
+
+    from jassv2_spark.operators.prune import prune_index_doc_centric
+
+    lam = 16
+    full = prune_index_doc_centric(idx, lam, cache=False)
+    small = replace(idx, conf=replace(idx.conf, shard_size=4))
+    cut = prune_index_doc_centric(small, lam, cache=False)
+    assert _postings(cut) == _postings(full)
+    # the default shard_size keeps every (term, impact) in one row; a
+    # shard_size of 4 splits the head terms' segments by doc-id range
+    assert cut.segments.count() > full.segments.count()
+
+
+def test_doc_centric_on_loaded_index_names_impacts(spark, idx, tmp_path):
+    from jassv2_spark.engine import Engine
+    from jassv2_spark.operators.prune import prune_index_doc_centric
+    from jassv2_spark.plans.persist import save_index_tables
+
+    save_index_tables(idx, str(tmp_path / "ix"))
+    loaded = Engine.load(spark, str(tmp_path / "ix")).index
+    with pytest.raises(ValueError, match="impacts"):
+        prune_index_doc_centric(loaded, 3)
