@@ -235,6 +235,13 @@ def _segment_tables(
     segments = build_segments(impacts, n_docs, conf.shard_size)
     if cache:
         segments = segments.persist()
+    return (segments, *_segment_rollup(segments, cache))
+
+
+def _segment_rollup(segments: DataFrame, cache: bool) -> tuple[DataFrame, DataFrame]:
+    """segments → seg_stats(term, impact, seg_freq) and term_stats(term,
+    df, max_impact, n_segments), both persisted when ``cache``. Shared by
+    the build and both static-pruning cuts (operators/prune.py)."""
     seg_stats = segments.groupBy("term", "impact").agg(F.sum("part_freq").alias("seg_freq"))
     term_stats = seg_stats.groupBy("term").agg(
         F.sum("seg_freq").alias("df"),
@@ -244,7 +251,7 @@ def _segment_tables(
     if cache:
         seg_stats = seg_stats.persist()
         term_stats = term_stats.persist()
-    return segments, seg_stats, term_stats
+    return seg_stats, term_stats
 
 
 def _count_tokens_udf(stem: bool, stop: frozenset, text_col: str, did: str):
@@ -392,9 +399,9 @@ def build_index(
     # count (a single parquet file = 1-2 splits in this sandbox; a real
     # 100 TB scan has thousands). Widen narrow inputs to one task per core:
     # A/B-measured against 4 tasks/core, which is ~35% SLOWER here — the
-    # tokenizer's per-task Arrow stream setup outweighs straggler smoothing
-    # (per-doc cost is uniform; contrast saat_search, where per-QUERY cost
-    # varies wildly and finer slices win).
+    # tokenizer's per-task Arrow stream setup outweighs straggler smoothing.
+    # saat_search widens its queries by the same rule: every Spark stage
+    # that runs Python costs ~250 ms on a 4-vCPU host, even for one row.
     if docs.rdd.getNumPartitions() < nparts:
         docs = docs.repartition(nparts)
 

@@ -31,7 +31,7 @@ from dataclasses import replace
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from jassv2_spark.operators.build import Index
+from jassv2_spark.operators.build import Index, _segment_rollup
 
 
 def prune_index(index: Index, m: int, cache: bool = True) -> Index:
@@ -87,16 +87,7 @@ def prune_index(index: Index, m: int, cache: bool = True) -> Index:
         )
     if cache:
         pruned = pruned.persist()
-
-    seg_stats = pruned.groupBy("term", "impact").agg(F.sum("part_freq").alias("seg_freq"))
-    term_stats = seg_stats.groupBy("term").agg(
-        F.sum("seg_freq").alias("df"),
-        F.max("impact").alias("max_impact"),
-        F.count(F.lit(1)).alias("n_segments"),
-    )
-    if cache:
-        seg_stats = seg_stats.persist()
-
+    seg_stats, term_stats = _segment_rollup(pruned, cache)
     return replace(
         index, segments=pruned, seg_stats=seg_stats, term_stats=term_stats
     )

@@ -35,6 +35,13 @@ Scale design:
   postings processed, collection-size-independent) beyond it. Measured on
   this corpus the dense scatter-add is ~5× faster per query; the sparse
   path exists because dense arrays at 10^12 docs are impossible.
+- Scheduling is ONE Spark stage per serve call, one task per core over
+  the caller's own query partitions: no count job, no query shuffle. On
+  a 4-vCPU host every stage that runs Python costs ~250 ms even for one
+  row, against ~0.3 ms of kernel for an interactive query, and finer
+  slices buy big batches nothing (a 32-core sweep of 4×/8×/16×/32× tasks
+  per core was within noise, BASELINE.md "8→32 corroboration pair"). The
+  package descriptor is O(n_buckets) scalars and rides in the closure.
 
 Must emit bitwise-identical results to the declarative path — enforced by
 tests/test_saat.py. Semantics (q_tf scaling, uint8 rescale, segment order,
@@ -47,9 +54,10 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 import uuid
 from collections import Counter
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -90,6 +98,16 @@ _STATS_SCHEMA = StructType(
         StructField("max_doc", LongType(), False),
     ]
 )
+
+
+def _query_rows(*cols: str) -> StructType:
+    """A serve call's output: query_id, then non-null long columns."""
+    fields = [StructField(c, LongType(), False) for c in cols]
+    return StructType([StructField("query_id", StringType(), False)] + fields)
+
+
+_RESULTS_SCHEMA = _query_rows("doc_id", "rsv", "rank")
+_QUERY_STATS_SCHEMA = _query_rows("postings_processed", "n_results", "usec")
 
 
 def package_index(index: Index, path: str | None = None, n_shards: int | None = None) -> dict:
@@ -435,6 +453,39 @@ def _search_one(
     return [(int(hit_ids[i]), int(vals[i])) for i in order], processed
 
 
+def _serve(
+    index: Index,
+    queries: DataFrame,
+    package: dict | None,
+    schema: StructType,
+    rows_of: Callable[[dict, str, str], list[tuple]],
+) -> DataFrame:
+    """The batch driver of both serve calls: ``rows_of(pkg, query_id,
+    query)`` turns one query into its output rows, and a call is ONE
+    ``mapInPandas`` stage with one task per core (module docstring). A
+    frame narrower than ``defaultParallelism`` is widened by one
+    ``repartition`` (the build's rule for `docs`, operators/build.py); a
+    wider one is merged by ``coalesce``, which needs no shuffle. Reading
+    the partition count runs no job on a local or file scan; under AQE a
+    frame whose plan ends in a shuffle runs that shuffle for it."""
+    pkg = package if package is not None else package_index(index)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[tuple] = []
+            for qid, qtext in zip(pdf["query_id"], pdf["query"]):
+                out.extend(rows_of(pkg, qid, qtext))
+            yield pd.DataFrame(out, columns=schema.fieldNames())
+
+    cores = max(1, queries.sparkSession.sparkContext.defaultParallelism)
+    n = queries.rdd.getNumPartitions()
+    if n < cores:
+        queries = queries.repartition(cores)
+    elif n > cores:
+        queries = queries.coalesce(cores)
+    return queries.mapInPandas(run, schema=schema)
+
+
 def saat_search_stats(
     index: Index,
     queries: DataFrame,
@@ -450,38 +501,14 @@ def saat_search_stats(
     `JASS_anytime.cpp:276-295`). postings_processed is deterministic and
     matches the declarative `search_metrics` under the same budget; usec
     is wall time of the kernel for this query on its worker."""
-    import time as _time
-
-    spark = queries.sparkSession
-    pkg = package if package is not None else package_index(index)
-    bpkg = spark.sparkContext.broadcast(pkg)
     raw = tokenizer == "raw"
-    schema = StructType(
-        [
-            StructField("query_id", StringType(), False),
-            StructField("postings_processed", LongType(), False),
-            StructField("n_results", LongType(), False),
-            StructField("usec", LongType(), False),
-        ]
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = bpkg.value
-        for pdf in batches:
-            out = []
-            for qid, qtext in zip(pdf["query_id"], pdf["query"]):
-                t0 = _time.perf_counter()
-                ranked, processed = _search_one(p, qtext, k, rho, postings_budget, raw=raw)
-                usec = int((_time.perf_counter() - t0) * 1e6)
-                out.append((qid, processed, len(ranked), usec))
-            yield pd.DataFrame(
-                out, columns=["query_id", "postings_processed", "n_results", "usec"]
-            )
+    def rows_of(pkg: dict, qid: str, query: str) -> list[tuple]:
+        t0 = time.perf_counter()
+        ranked, processed = _search_one(pkg, query, k, rho, postings_budget, raw=raw)
+        return [(qid, processed, len(ranked), int((time.perf_counter() - t0) * 1e6))]
 
-    nparts = min(
-        4 * max(1, spark.sparkContext.defaultParallelism), max(1, queries.count())
-    )
-    return queries.repartition(nparts).mapInPandas(run, schema=schema)
+    return _serve(index, queries, package, _QUERY_STATS_SCHEMA, rows_of)
 
 
 def saat_search(
@@ -495,38 +522,10 @@ def saat_search(
 ) -> DataFrame:
     """Batch search via the shared-mmap package; schema matches the
     declarative path: (query_id, doc_id, rsv, rank)."""
-    spark = queries.sparkSession
-    pkg = package if package is not None else package_index(index)
-    bpkg = spark.sparkContext.broadcast(pkg)
-
-    schema = StructType(
-        [
-            StructField("query_id", StringType(), False),
-            StructField("doc_id", LongType(), False),
-            StructField("rsv", LongType(), False),
-            StructField("rank", LongType(), False),
-        ]
-    )
-
     raw = tokenizer == "raw"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = bpkg.value
-        for pdf in batches:
-            out = []
-            for qid, qtext in zip(pdf["query_id"], pdf["query"]):
-                ranked, _ = _search_one(p, qtext, k, rho, postings_budget, raw=raw)
-                for rank, (doc, rsv) in enumerate(ranked, start=1):
-                    out.append((qid, doc, rsv, rank))
-            yield pd.DataFrame(out, columns=["query_id", "doc_id", "rsv", "rank"])
+    def rows_of(pkg: dict, qid: str, query: str) -> list[tuple]:
+        ranked, _ = _search_one(pkg, query, k, rho, postings_budget, raw=raw)
+        return [(qid, doc, rsv, rank) for rank, (doc, rsv) in enumerate(ranked, start=1)]
 
-    # 4 tasks per core: query cost varies wildly (1-term vs 5-term, hot vs
-    # cold terms), so exactly-one-task-per-core loses cores to stragglers;
-    # finer slices let the scheduler rebalance — the Spark analogue of the
-    # reference's per-query work-stealing (`anytime/JASS_anytime_query.h:88-103`).
-    # Capped at the query count so tiny batches don't schedule empty tasks.
-    nparts = min(
-        4 * max(1, spark.sparkContext.defaultParallelism),
-        max(1, queries.count()),
-    )
-    return queries.repartition(nparts).mapInPandas(run, schema=schema)
+    return _serve(index, queries, package, _RESULTS_SCHEMA, rows_of)

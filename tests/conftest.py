@@ -11,9 +11,18 @@ from jassv2_spark.session import get_spark
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 
+# Spark's Python workers re-read pyspark.zip's directory before every task
+# (spark_worker_site/sitecustomize.py): ~0.2 s of CPU per task, most of the
+# suite's time on a 4-core host. The session's workers start with the fix.
+WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "spark_worker_site")
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="jassv2-spark-tests", cores=4, shuffle_partitions=4)
+    s = get_spark(
+        app_name="jassv2-spark-tests", cores=4, shuffle_partitions=4,
+        extra_conf={"spark.executorEnv.PYTHONPATH": WORKER_SITE},
+    )
     yield s
     s.stop()
 

@@ -3,16 +3,27 @@ file-in/file-out workflow, end-to-end on the ten-document corpus."""
 
 import os
 
+import pytest
+
 from jassv2_spark.cli import jass_anytime_main, jass_eval_main, jass_index_main
 from jassv2_spark.fixtures import TEN_DOC_QUERIES, ten_documents
 
 
-def test_cli_index_anytime_eval_roundtrip(spark, tmp_path, capsys):
-    # --- jass index -f docs.trec -o ix ---------------------------------
-    trec = tmp_path / "docs.trec"
+@pytest.fixture(scope="module")
+def ten_ix(spark, tmp_path_factory):
+    """`jass index -f docs.trec -o ix` over the ten documents, built once;
+    the tests only read the index dir."""
+    root = tmp_path_factory.mktemp("cli")
+    trec = root / "docs.trec"
     trec.write_bytes(b"".join(r["html"] for r in ten_documents()))
-    ix = str(tmp_path / "ix")
+    ix = str(root / "ix")
     assert jass_index_main(["-f", str(trec), "-o", ix]) == 0
+    return ix
+
+
+def test_cli_index_anytime_eval_roundtrip(spark, ten_ix, tmp_path, capsys):
+    # --- jass index -f docs.trec -o ix ---------------------------------
+    ix = ten_ix
     assert os.path.exists(os.path.join(ix, "stats.json"))
 
     # --- jass anytime -i ix -q queries.txt -k 3 ------------------------
@@ -58,14 +69,11 @@ def test_cli_index_anytime_eval_roundtrip(spark, tmp_path, capsys):
     assert any("mean_buying_power" in l for l in out_p.splitlines())
 
 
-def test_cli_anytime_oracle_rsv_file(spark, tmp_path):
+def test_cli_anytime_oracle_rsv_file(spark, ten_ix, tmp_path):
     """`jass anytime -Q rsvfile` (the reference's oracle rsv@k mode): with
     each query's k-th score from a first run as its oracle, the run is
     identical to the run without -Q."""
-    trec = tmp_path / "docs.trec"
-    trec.write_bytes(b"".join(r["html"] for r in ten_documents()))
-    ix = str(tmp_path / "ix")
-    assert jass_index_main(["-f", str(trec), "-o", ix]) == 0
+    ix = ten_ix
     qfile = tmp_path / "queries.txt"
     qfile.write_text("".join(f"{qid} {q}\n" for qid, q in TEN_DOC_QUERIES))
 

@@ -89,6 +89,26 @@ def ten_index(spark):
     idx.unpersist()
 
 
+@pytest.fixture(scope="module")
+def syn150(spark):
+    """A 150-doc synthetic corpus's index, and its top-k (query_id, rank,
+    rsv) for TEN_DOC_QUERIES + one two-term query, the import tests' want."""
+    from jassv2_spark.operators.search import search
+
+    rows = synthetic_corpus(150)
+    docs = spark.createDataFrame(
+        [(r["url"], r["html"].decode()) for r in rows], ["url", "html"]
+    )
+    idx = build_index(docs, text_col="html", key_col="url")
+    qdf = spark.createDataFrame(
+        TEN_DOC_QUERIES + [("s1", "w0001 w0002")], ["query_id", "query"]
+    )
+    want = sorted((r["query_id"], r["rank"], r["rsv"])
+                  for r in search(idx, qdf, k=10).collect())
+    yield idx, qdf, want
+    idx.unpersist()
+
+
 def test_golden_checksums(ten_index, tmp_path):
     out = str(tmp_path / "ci")
     info = write_jass_v1(ten_index, out)
@@ -324,30 +344,20 @@ def test_extension_codex_round_trip(codex, ten_index, tmp_path):
 
 
 @pytest.mark.parametrize("codex", ["c", "8", "Q", "R"])
-def test_extension_codex_import_serves(spark, codex, tmp_path):
+def test_extension_codex_import_serves(spark, syn150, codex, tmp_path):
     """ATIRE-era tags end-to-end: write a quantized 150-doc index in the
     historical codec, import the binary, serve — rsv histograms must
     match the source engine per query."""
     from jassv2_spark.operators.search import search
     from jassv2_spark.plans.jass_v1 import build_index_from_jass_v1
 
-    rows = synthetic_corpus(150)
-    docs = spark.createDataFrame(
-        [(r["url"], r["html"].decode()) for r in rows], ["url", "html"]
-    )
-    idx = build_index(docs, text_col="html", key_col="url")
+    idx, qdf, want = syn150
     out = str(tmp_path / f"imp_{codex}")
     write_jass_v1(idx, out, codex=ord(codex), impacts="quantized")
     imported = build_index_from_jass_v1(spark, out)
-    qdf = spark.createDataFrame(
-        TEN_DOC_QUERIES + [("s1", "w0001 w0002")], ["query_id", "query"]
-    )
-    want = sorted((r["query_id"], r["rank"], r["rsv"])
-                  for r in search(idx, qdf, k=10).collect())
     got = sorted((r["query_id"], r["rank"], r["rsv"])
                  for r in search(imported, qdf, k=10).collect())
     assert want and got == want
-    idx.unpersist()
     imported.unpersist()
 
 
@@ -404,16 +414,12 @@ def test_jass_v2_round_trip_and_cross_format(ten_index, tmp_path):
             < _os.path.getsize(_os.path.join(out1, "CIpostings.bin")))
 
 
-def test_jass_v2_import_serves_rank_identical(spark, tmp_path):
+def test_jass_v2_import_serves_rank_identical(spark, syn150, tmp_path):
     from jassv2_spark.operators.search import search
     from jassv2_spark.plans.jass_v1 import (build_index_from_jass_v1,
                                             write_jass_v2)
 
-    rows = synthetic_corpus(150)
-    docs = spark.createDataFrame(
-        [(r["url"], r["html"].decode()) for r in rows], ["url", "html"]
-    )
-    idx = build_index(docs, text_col="html", key_col="url")
+    idx, _, _ = syn150
     out = str(tmp_path / "v2imp")
     write_jass_v2(idx, out, impacts="quantized")
     imported = build_index_from_jass_v1(spark, out, version=2)
@@ -430,7 +436,6 @@ def test_jass_v2_import_serves_rank_identical(spark, tmp_path):
         for r in search(imported, qdf, k=10).collect()
     )
     assert want and got == want
-    idx.unpersist()
     imported.unpersist()
 
 

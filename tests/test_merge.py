@@ -32,6 +32,14 @@ def corpus(spark):
 
 
 @pytest.fixture(scope="module")
+def direct(corpus):
+    """The in-memory build of the whole corpus, keyed by its own doc ids:
+    the index every maintenance path over that corpus must equal, and the
+    base of the in-memory deletes. Tests only read it."""
+    return build_index(corpus, text_col="text", key_col="doc_id", doc_id_col="doc_id")
+
+
+@pytest.fixture(scope="module")
 def build_dirs(spark, corpus, tmp_path_factory):
     """Persisted builds of the corpus's even docs ("a"), odd docs ("b") and
     all docs ("d"), shared by the build-dir tests; each test writes only
@@ -65,13 +73,12 @@ def _topk(idx, spark, queries, k=10):
     )
 
 
-def test_merge_disjoint_ids_equals_direct_build(spark, corpus):
+def test_merge_disjoint_ids_equals_direct_build(spark, corpus, direct):
     even = corpus.filter(F.col("doc_id") % 2 == 0)
     odd = corpus.filter(F.col("doc_id") % 2 == 1)
     a = build_index(even, text_col="text", key_col="doc_id", doc_id_col="doc_id")
     b = build_index(odd, text_col="text", key_col="doc_id", doc_id_col="doc_id")
     merged = merge_indexes([a, b])
-    direct = build_index(corpus, text_col="text", key_col="doc_id", doc_id_col="doc_id")
 
     assert merged.n_docs == direct.n_docs
     assert merged.collection_length == direct.collection_length
@@ -105,24 +112,24 @@ def test_merge_rekey_equals_direct_build(spark, corpus):
     )
 
 
-def test_delete_docs_equals_build_of_survivors(spark, corpus):
-    full = build_index(corpus, text_col="text", key_col="doc_id", doc_id_col="doc_id")
+def test_delete_docs_equals_build_of_survivors(spark, corpus, direct):
+    full = direct
     doomed = corpus.select("doc_id").filter(F.col("doc_id") % 5 == 0)
     after = delete_docs(full, doomed)
-    direct = build_index(corpus.filter(F.col("doc_id") % 5 != 0),
-                         text_col="text", key_col="doc_id", doc_id_col="doc_id")
+    survivors = build_index(corpus.filter(F.col("doc_id") % 5 != 0),
+                            text_col="text", key_col="doc_id", doc_id_col="doc_id")
 
-    assert after.n_docs == direct.n_docs
-    assert after.collection_length == direct.collection_length
-    assert after.mean_doc_length == direct.mean_doc_length  # bitwise
-    assert (after.min_rsv, after.max_rsv) == (direct.min_rsv, direct.max_rsv)
-    assert _segments_sorted(after) == _segments_sorted(direct)
+    assert after.n_docs == survivors.n_docs
+    assert after.collection_length == survivors.collection_length
+    assert after.mean_doc_length == survivors.mean_doc_length  # bitwise
+    assert (after.min_rsv, after.max_rsv) == (survivors.min_rsv, survivors.max_rsv)
+    assert _segments_sorted(after) == _segments_sorted(survivors)
     queries = synthetic_queries(8)
-    assert _topk(after, spark, queries) == _topk(direct, spark, queries)
+    assert _topk(after, spark, queries) == _topk(survivors, spark, queries)
 
 
-def test_delete_docs_accepts_iterable_and_ignores_unknown(spark, corpus):
-    full = build_index(corpus, text_col="text", key_col="doc_id", doc_id_col="doc_id")
+def test_delete_docs_accepts_iterable_and_ignores_unknown(spark, direct):
+    full = direct
     after = delete_docs(full, [1, 2, 3, 999_999])
     assert after.n_docs == full.n_docs - 3
     assert after.doc_map.filter(F.col("doc_id").isin(1, 2, 3)).count() == 0
@@ -135,12 +142,11 @@ def test_delete_docs_requires_counts(spark, corpus):
         delete_docs(full, [1])
 
 
-def test_add_docs_equals_direct_build(spark, corpus):
+def test_add_docs_equals_direct_build(spark, corpus, direct):
     old = corpus.filter(F.col("doc_id") <= 120)
     new = corpus.filter(F.col("doc_id") > 120)
     base = build_index(old, text_col="text", key_col="doc_id", doc_id_col="doc_id")
     grown = add_docs(base, new, text_col="text", key_col="doc_id", doc_id_col="doc_id")
-    direct = build_index(corpus, text_col="text", key_col="doc_id", doc_id_col="doc_id")
 
     assert grown.n_docs == direct.n_docs
     assert (grown.min_rsv, grown.max_rsv) == (direct.min_rsv, direct.max_rsv)

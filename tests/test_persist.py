@@ -19,7 +19,7 @@ from jassv2_spark.plans.persist import (
 )
 
 
-@pytest.fixture()
+@pytest.fixture(scope="module")
 def docs(spark):
     rows = synthetic_corpus(150)
     return spark.createDataFrame([(r["url"], r["text"]) for r in rows], ["url", "text"])
@@ -33,18 +33,43 @@ def _results(idx, spark, queries):
     )
 
 
-def test_persisted_build_equals_in_memory(spark, docs, tmp_path):
+@pytest.fixture(scope="module")
+def in_memory(spark, docs):
+    """The clean in-memory build of `docs` every persisted build must
+    match, and its top-k for ``synthetic_queries(n)``, computed once per
+    n for the module."""
+    idx_m = build_index(docs, text_col="text", key_col="url", cache=False)
+    memo = {}
+
+    def results(n):
+        if n not in memo:
+            memo[n] = _results(idx_m, spark, synthetic_queries(n))
+        return memo[n]
+
+    return idx_m, results
+
+
+@pytest.fixture(scope="module")
+def persisted_dir(docs, tmp_path_factory):
+    """One finished persisted build of `docs`, for the tests that only
+    read it back."""
+    out = str(tmp_path_factory.mktemp("persisted") / "idx")
+    build_index_persisted(docs, out, text_col="text", key_col="url")
+    return out
+
+
+def test_persisted_build_equals_in_memory(spark, docs, in_memory, tmp_path):
     out = str(tmp_path / "idx")
     idx_p = build_index_persisted(docs, out, text_col="text", key_col="url")
-    idx_m = build_index(docs, text_col="text", key_col="url", cache=False)
+    idx_m, results = in_memory
     queries = synthetic_queries(8)
-    assert _results(idx_p, spark, queries) == _results(idx_m, spark, queries)
+    assert _results(idx_p, spark, queries) == results(8)
     assert idx_p.n_docs == idx_m.n_docs
     assert (idx_p.min_rsv, idx_p.max_rsv) == (idx_m.min_rsv, idx_m.max_rsv)
 
 
 @pytest.mark.parametrize("fail_stage", STAGES)
-def test_resume_after_injected_failure(spark, docs, tmp_path, fail_stage):
+def test_resume_after_injected_failure(spark, docs, in_memory, tmp_path, fail_stage):
     out = str(tmp_path / f"idx_{fail_stage}")
     with pytest.raises(RuntimeError, match="injected failure"):
         build_index_persisted(docs, out, text_col="text", key_col="url", fail_after=fail_stage)
@@ -66,9 +91,8 @@ def test_resume_after_injected_failure(spark, docs, tmp_path, fail_stage):
     assert all(after[s]["complete"] for s in STAGES)
 
     # and the resumed index answers queries identically to a clean build
-    idx_m = build_index(docs, text_col="text", key_col="url", cache=False)
-    queries = synthetic_queries(5)
-    assert _results(idx, spark, queries) == _results(idx_m, spark, queries)
+    _, results = in_memory
+    assert _results(idx, spark, synthetic_queries(5)) == results(5)
 
 
 # inflected forms, so a build that skips stemming shows in its vocabulary
@@ -152,9 +176,8 @@ def test_counts_stage_is_one_fused_pass(spark, docs, tmp_path, monkeypatch):
     assert "Aggregate" not in plan
 
 
-def test_lineage_rows_cover_stage(spark, docs, tmp_path):
-    out = str(tmp_path / "idx_lineage")
-    build_index_persisted(docs, out, text_col="text", key_col="url")
+def test_lineage_rows_cover_stage(spark, persisted_dir):
+    out = persisted_dir
     counts_rows = spark.read.parquet(os.path.join(out, "counts")).count()
     lin = lineage(spark, out, "counts")
     assert lin.groupBy().sum("rows").collect()[0][0] == counts_rows
@@ -163,13 +186,11 @@ def test_lineage_rows_cover_stage(spark, docs, tmp_path):
     assert all(m[s]["wall_sec"] >= 0 for s in m)
 
 
-def test_load_index_tables_roundtrip(spark, docs, tmp_path):
-    out = str(tmp_path / "idx_load")
-    build_index_persisted(docs, out, text_col="text", key_col="url")
-    idx = load_index_tables(spark, out)
+def test_load_index_tables_roundtrip(spark, persisted_dir, in_memory):
+    idx = load_index_tables(spark, persisted_dir)
     queries = synthetic_queries(5)
-    idx_m = build_index(docs, text_col="text", key_col="url", cache=False)
-    assert _results(idx, spark, queries) == _results(idx_m, spark, queries)
+    _, results = in_memory
+    assert _results(idx, spark, queries) == results(5)
     # term-bucket partition pruning is available on disk
     assert "term_bucket" in idx.segments.columns
 

@@ -63,6 +63,33 @@ def test_prune_bounds_per_term(spark, idx):
     assert per_term and all(r["n"] <= m for r in per_term)
 
 
+def test_prune_rolls_up_and_caches_its_stats(spark, idx):
+    """The champion cut's seg_stats/term_stats are the rollup of its own
+    segments, and with cache=True every table it rewrites is cached."""
+    m = 5
+    pruned = prune_index(idx, m)
+    try:
+        seg_stats = (
+            pruned.segments.groupBy("term", "impact")
+            .agg(F.sum("part_freq").alias("seg_freq"))
+        )
+        term_stats = seg_stats.groupBy("term").agg(
+            F.sum("seg_freq").alias("df"),
+            F.max("impact").alias("max_impact"),
+            F.count(F.lit(1)).alias("n_segments"),
+        )
+        canon = lambda df: sorted(map(tuple, df.collect()))
+        assert canon(pruned.seg_stats) == canon(seg_stats)
+        assert canon(pruned.term_stats) == canon(term_stats)
+        assert all(r["df"] <= m for r in pruned.term_stats.collect())
+        assert pruned.segments.is_cached
+        assert pruned.seg_stats.is_cached
+        assert pruned.term_stats.is_cached
+    finally:
+        for t in (pruned.segments, pruned.seg_stats, pruned.term_stats):
+            t.unpersist()
+
+
 def test_pruned_search_runs_plain_semantics(spark, idx):
     queries = spark.createDataFrame(synthetic_queries(8), ["query_id", "query"])
     full = search(idx, queries, k=10, with_keys=False)

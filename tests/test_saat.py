@@ -1,11 +1,13 @@
 """SaaT fast path must be bitwise-identical to the declarative path."""
 
+from collections import Counter
+
 import pytest
 
 from jassv2_spark.fixtures import TEN_DOC_QUERIES, synthetic_corpus, synthetic_queries, ten_documents
 from jassv2_spark.operators.build import build_index
-from jassv2_spark.operators.saat import package_index, saat_search
-from jassv2_spark.operators.search import search
+from jassv2_spark.operators.saat import package_index, saat_search, saat_search_stats
+from jassv2_spark.operators.search import search, search_metrics
 
 
 def _collect(df):
@@ -107,9 +109,6 @@ def test_saat_stats_match_declarative_metrics(spark, syn):
     """The fast path's per-query postings_processed must equal the
     declarative search_metrics (same budget logic on both sides); usec is
     a positive wall-clock reading (JASS_anytime_stats parity)."""
-    from jassv2_spark.operators.saat import saat_search_stats
-    from jassv2_spark.operators.search import search_metrics
-
     idx, pkg = syn
     queries = synthetic_queries(12)
     qdf = spark.createDataFrame(queries, ["query_id", "query"])
@@ -122,6 +121,78 @@ def test_saat_stats_match_declarative_metrics(spark, syn):
         got = {r["query_id"]: r["postings_processed"] for r in rows if r["postings_processed"] > 0}
         assert got == {q: p for q, p in want.items() if p > 0}, rho
         assert all(r["usec"] >= 0 for r in rows)
+
+
+def _jobs_in_group(sc, group, action):
+    """Run ``action`` under its own job group; the JobInfo of every job it
+    ran, once the status store has seen them all finish."""
+    import time
+
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while True:
+        infos = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        done = infos and all(i is not None and i.status == "SUCCEEDED" for i in infos)
+        if done or time.monotonic() > deadline:
+            return infos
+        time.sleep(0.05)
+
+
+@pytest.mark.parametrize("fn", [saat_search, saat_search_stats])
+def test_saat_call_is_one_job_one_stage(spark, syn, fn):
+    """A serve call over a default-partitioned frame runs no count job and
+    no query shuffle: one Spark job of one stage."""
+    idx, pkg = syn
+    qdf = spark.createDataFrame(synthetic_queries(12), ["query_id", "query"])
+    infos = _jobs_in_group(
+        spark.sparkContext, f"one-stage-{fn.__name__}",
+        lambda: fn(idx, qdf, k=10, package=pkg).collect(),
+    )
+    assert [len(i.stageIds) for i in infos] == [1]
+
+
+@pytest.mark.parametrize("parts", [1, 16])
+def test_saat_any_query_partitioning_equals_declarative(spark, syn, parts):
+    """A frame narrower than the session's parallelism is widened, a wider
+    one merged; rows and stats stay bitwise the declarative path's."""
+    idx, pkg = syn
+    qdf = spark.createDataFrame(synthetic_queries(30) + TEN_DOC_QUERIES, ["query_id", "query"])
+    parted = qdf.coalesce(1) if parts == 1 else qdf.repartition(parts)
+    assert parted.rdd.getNumPartitions() == parts
+    cores = spark.sparkContext.defaultParallelism
+    rows = saat_search(idx, parted, k=10, rho=0.3, package=pkg)
+    assert rows.rdd.getNumPartitions() == cores
+    ranked = _collect(rows)
+    assert ranked == _collect(search(idx, qdf, k=10, rho=0.3, with_keys=False))
+    want = {
+        r["query_id"]: r["postings_processed"]
+        for r in search_metrics(idx, qdf, rho=0.3).collect()
+    }
+    stats = saat_search_stats(idx, parted, k=10, rho=0.3, package=pkg).collect()
+    got = {r["query_id"]: r["postings_processed"] for r in stats if r["postings_processed"] > 0}
+    assert got == {q: p for q, p in want.items() if p > 0}
+    assert {r["query_id"]: r["n_results"] for r in stats if r["n_results"]} == Counter(
+        qid for qid, *_ in ranked
+    )
+
+
+def test_saat_empty_queries(spark, syn):
+    """No queries: no rows, and each call's documented schema."""
+    idx, pkg = syn
+    empty = spark.createDataFrame([], "query_id string, query string")
+    for fn, cols in [
+        (saat_search, ["query_id", "doc_id", "rsv", "rank"]),
+        (saat_search_stats, ["query_id", "postings_processed", "n_results", "usec"]),
+    ]:
+        out = fn(idx, empty, k=10, package=pkg)
+        want = [(c, "string" if c == "query_id" else "bigint", False) for c in cols]
+        assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema] == want
+        assert out.collect() == []
 
 
 def test_mmap_cache_bounded():

@@ -21,6 +21,18 @@ def ten(spark):
     idx.unpersist()
 
 
+@pytest.fixture(scope="module")
+def syn(spark):
+    """A 300-doc synthetic corpus's rows and its index."""
+    rows = synthetic_corpus(300)
+    docs = spark.createDataFrame(
+        [(r["url"], r["html"].decode()) for r in rows], ["url", "html"]
+    )
+    idx = build_index(docs, text_col="html", key_col="url")
+    yield rows, idx
+    idx.unpersist()
+
+
 def _spark_results(idx, spark, queries, k=10, rho=1.0):
     qdf = spark.createDataFrame(queries, ["query_id", "query"])
     res = search(idx, qdf, k=k, rho=rho, with_keys=False).collect()
@@ -96,19 +108,14 @@ def test_trec_run_format(ten, spark):
 
 
 @pytest.mark.parametrize("rho", [1.0, 0.2])
-def test_synthetic_corpus_matches_oracle(spark, rho):
-    rows = synthetic_corpus(300)
-    docs = spark.createDataFrame(
-        [(r["url"], r["html"].decode()) for r in rows], ["url", "html"]
-    )
-    idx = build_index(docs, text_col="html", key_col="url")
+def test_synthetic_corpus_matches_oracle(spark, syn, rho):
+    rows, idx = syn
     py = PyIndex([(i + 1, rows[i]["html"].decode()) for i in range(len(rows))])
     queries = synthetic_queries(25)
     got = _spark_results(idx, spark, queries, k=10, rho=rho)
     for qid, qtext in queries:
         want, _ = py.search(qtext, k=10, rho=rho)
         assert got.get(qid, []) == want, f"{qid} ({qtext!r}) rho={rho}"
-    idx.unpersist()
 
 
 def test_search_same_results_at_two_parallelisms(spark):
@@ -124,17 +131,13 @@ def test_search_same_results_at_two_parallelisms(spark):
     assert r1 == r4
 
 
-def test_sharded_search_equals_global(spark):
+def test_sharded_search_equals_global(spark, syn):
     """Two-stage doc-sharded top-k (`search_sharded`) is row-for-row the
     single-window `search` — across k, ρ, shard counts exceeding n_docs,
     and tie-heavy synthetic scores."""
     from jassv2_spark.operators.search import search_sharded
 
-    rows = synthetic_corpus(300)
-    docs = spark.createDataFrame(
-        [(r["url"], r["html"].decode()) for r in rows], ["url", "html"]
-    )
-    idx = build_index(docs, text_col="html", key_col="url")
+    _, idx = syn
     queries = synthetic_queries(12)
     qdf = spark.createDataFrame(queries, ["query_id", "query"])
 
@@ -161,7 +164,6 @@ def test_sharded_search_equals_global(spark):
         canon(search(idx, qdf, k=10, with_keys=False, auto_shard_threshold=10**15))
         == want
     )
-    idx.unpersist()
 
 
 def test_engine_reference_api_surface(spark):
