@@ -468,7 +468,7 @@ def registry() -> dict[str, tuple]:
     def _qparse(spark, sf):
         from jassv2_spark.operators.search import parse_queries
 
-        q_terms, _ = parse_queries(_queries_df(spark))
+        q_terms = parse_queries(_queries_df(spark))
         return q_terms.select("query_id", "term", F.col("q_tf").cast("long").alias("q_tf"))
 
     r["jass_query_parse"] = (
@@ -483,7 +483,7 @@ def registry() -> dict[str, tuple]:
     def _qparse_raw(spark, sf):
         from jassv2_spark.operators.search import parse_queries
 
-        q_terms, _ = parse_queries(
+        q_terms = parse_queries(
             spark.createDataFrame(RAW_QUERIES, ["query_id", "query"]), tokenizer="raw"
         )
         return q_terms.select("query_id", "term", F.col("q_tf").cast("long").alias("q_tf"))
@@ -1853,7 +1853,6 @@ fagg AS (SELECT query_id, doc_id, count(*)::BIGINT AS n_matched,
     # corpus's rsv-vs-mass relationship.
     def _ltr_fit(spark, sf):
         from jassv2_spark.operators.ltr import fit_linear, ltr_features
-        from jassv2_spark.operators.search import parse_queries
 
         idx = get_index(spark, sf)
         feats = ltr_features(idx, _queries_df(spark), k=K)
@@ -1955,7 +1954,7 @@ lfdet AS (SELECT n,
         from jassv2_spark.operators.search import parse_queries
 
         idx = get_index(spark, sf)
-        q_terms, _ = parse_queries(_queries_df(spark))
+        q_terms = parse_queries(_queries_df(spark))
         qt = q_terms.select("query_id", "term").distinct()
         n_q = qt.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_q"))
         qrels = (
@@ -3194,7 +3193,7 @@ fta AS (SELECT query_id,
         idx = get_index(spark, sf)
         run = search(idx, _queries_df(spark), k=K, rho=1.0, with_keys=False)
         # deterministic binary qrels: docs containing any query term
-        q_terms, _ = __import__(
+        q_terms = __import__(
             "jassv2_spark.operators.search", fromlist=["parse_queries"]
         ).parse_queries(_queries_df(spark))
         qrels = (
@@ -3274,7 +3273,7 @@ FROM nrel n FULL OUTER JOIN m ON m.query_id = n.query_id"""
 
         idx = get_index(spark, sf)
         run = search(idx, _queries_df(spark), k=K, rho=1.0, with_keys=False)
-        q_terms, _ = parse_queries(_queries_df(spark))
+        q_terms = parse_queries(_queries_df(spark))
         qrels = (
             q_terms.select("query_id", "term")
             .distinct()
@@ -3325,7 +3324,7 @@ FROM idcg ic FULL OUTER JOIN dcg d ON d.query_id = ic.query_id"""
 
         idx = get_index(spark, sf)
         run = search(idx, _queries_df(spark), k=K, rho=1.0, with_keys=False)
-        q_terms, _ = parse_queries(_queries_df(spark))
+        q_terms = parse_queries(_queries_df(spark))
         # qrels: docs matching >= 2 distinct query terms, so the run holds
         # a mix of relevant and non-relevant results (single-term queries
         # get no relevant docs and exercise the perfect-score branches)

@@ -107,7 +107,7 @@ def bm25f_topk(
     n_docs, total_wdl = int(g["n"]), int(g["total"] or 0)
     mean_wdl = float(total_wdl) / float(n_docs) if n_docs else 0.0
 
-    q_terms, _ = parse_queries(queries, tokenizer=tokenizer)
+    q_terms = parse_queries(queries, tokenizer=tokenizer)
     dfs = (
         wtf.join(F.broadcast(q_terms.select("term").distinct()), "term")
         .groupBy("term")

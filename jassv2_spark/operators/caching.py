@@ -52,7 +52,7 @@ def cache_admission(
     q_tf); admitted is 1 while the running df total under the
     density order (score_micros DESC, term ASC) stays ≤ the budget.
     """
-    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
     qtf = q_terms.groupBy("term").agg(F.sum("q_tf").cast("long").alias("qtf"))
     t = qtf.join(F.broadcast(index.term_stats.select("term", "df")), "term")
     scored = t.withColumn(

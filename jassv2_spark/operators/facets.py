@@ -51,8 +51,8 @@ def facet_counts(
 
     `doc_facets` carries (doc_id, <facet_col>); rows per doc_id must be
     unique (a doc belongs to one bucket per facet dimension)."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg)
     joined = hits.join(
         doc_facets.select("doc_id", F.col(facet_col).alias("facet")), "doc_id"

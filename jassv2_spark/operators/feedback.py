@@ -17,8 +17,8 @@ engine-native and fully deterministic:
           (exp_score DESC, term ASC) — fully deterministic tie-break.
   pass 2: re-run search with qt₂ = original terms (their q_tf) ∪ expansion
           terms (q_tf = 1) through the SAME segment pipeline
-          (search_from_terms), n_terms recounted over qt₂ so the uint8
-          rescale sees the expanded query.
+          (search_from_terms), whose uint8 rescale divisor n_terms is
+          qt₂'s term count, so the rescale sees the expanded query.
 
 Scale shape: pass 1 is the ordinary serve path; the feedback join
 broadcasts the tiny (queries × fb_docs) hit set into the postings table
@@ -62,7 +62,7 @@ def rm3_expansion_terms(
         .groupBy("query_id", "term")
         .agg(F.sum(F.col("tf") * F.col("rsv")).cast("long").alias("exp_score"))
     )
-    q_terms, _ = parse_queries(queries, *_query_conf(index))
+    q_terms = parse_queries(queries, *_query_conf(index))
     novel = scores.join(
         F.broadcast(q_terms.select("query_id", "term")), ["query_id", "term"], "left_anti"
     )
@@ -92,14 +92,11 @@ def rm3_search(
     exp = rm3_expansion_terms(
         index, queries, fb_docs=fb_docs, fb_terms=fb_terms, rho=rho
     )
-    q_terms, _ = parse_queries(queries, *_query_conf(index))
+    q_terms = parse_queries(queries, *_query_conf(index))
     qt2 = q_terms.unionByName(
         exp.select("query_id", "term", F.lit(1).cast("long").alias("q_tf"))
     )
-    qm2 = qt2.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
-    return search_from_terms(
-        index, qt2, qm2, k=k, rho=rho, with_keys=with_keys
-    )
+    return search_from_terms(index, qt2, k=k, rho=rho, with_keys=with_keys)
 
 
 ROCCHIO_ALPHA = 2
@@ -165,7 +162,7 @@ def rocchio_search(
     exp = rocchio_centroid_terms(
         index, queries, fb_docs=fb_docs, fb_terms=fb_terms, rho=rho
     )
-    q_terms, _ = parse_queries(queries, *_query_conf(index))
+    q_terms = parse_queries(queries, *_query_conf(index))
     qt2 = (
         q_terms.select(
             "query_id", "term", (F.col("q_tf") * F.lit(int(alpha))).alias("w")
@@ -176,5 +173,4 @@ def rocchio_search(
         .groupBy("query_id", "term")
         .agg(F.sum("w").cast("long").alias("q_tf"))
     )
-    qm2 = qt2.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
-    return search_from_terms(index, qt2, qm2, k=k, rho=rho, with_keys=with_keys)
+    return search_from_terms(index, qt2, k=k, rho=rho, with_keys=with_keys)

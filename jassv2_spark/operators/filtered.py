@@ -18,9 +18,10 @@ pipeline (q_tf scaling, uint8 rescale, segment order, ρ budget):
     Query syntax "spark -join": '-'-prefixed words exclude any document
     containing ANY negated term (strict NOT). Positive terms serve as
     usual — the negated terms do NOT count toward n_terms (the uint8
-    rescale divisor), matching how a separate exclusion clause would be
-    compiled. Exclusion docs come from the negated terms' postings and
-    are removed with an anti-join keyed (query_id, doc_id).
+    rescale divisor): they never enter the term set gather_segments
+    counts, matching how a separate exclusion clause would be compiled.
+    Exclusion docs come from the negated terms' postings and are removed
+    with an anti-join keyed (query_id, doc_id).
 
 Scale shape: the allowed/excluded sets join on doc_id after the one
 (query_id, doc_id) hash-agg the serve path already pays — co-partitioned
@@ -56,8 +57,8 @@ def search_filtered(
 ) -> DataFrame:
     """Top-k restricted to `allowed_docs` (a (doc_id, ...) DataFrame);
     rsv unchanged, ranks within the filtered set."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg).join(
         allowed_docs.select("doc_id"), "doc_id", "left_semi"
     )
@@ -66,8 +67,8 @@ def search_filtered(
 
 def parse_negated_queries(
     queries: DataFrame, tokenizer: str = "parity", stem: bool = False
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(q_terms, q_meta, q_neg): '-'-prefixed whitespace words become
+) -> tuple[DataFrame, DataFrame]:
+    """(q_terms, q_neg): '-'-prefixed whitespace words become
     negated terms (tokenized with the same parser, so '-Join' excludes
     'join'); everything else parses exactly like `parse_queries`.
     q_neg is (query_id, term) distinct."""
@@ -92,9 +93,7 @@ def parse_negated_queries(
     q_terms = (
         _terms(pos).groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("q_tf"))
     )
-    q_meta = q_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
-    q_neg = _terms(neg).distinct()
-    return q_terms, q_meta, q_neg
+    return q_terms, _terms(neg).distinct()
 
 
 def search_negated(
@@ -107,8 +106,8 @@ def search_negated(
 ) -> DataFrame:
     """Top-k with '-term' exclusion: a doc containing ANY negated term is
     removed from that query's results."""
-    q_terms, q_meta, q_neg = parse_negated_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms, q_neg = parse_negated_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg)
     excluded = (
         F.broadcast(q_neg)

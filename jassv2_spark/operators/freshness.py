@@ -56,8 +56,8 @@ def search_fresh(
     fresh_micros, rank). `doc_ts` maps doc_id → timestamp (e.g. warc_ts);
     age is measured from the corpus' newest timestamp, so the ranking is
     a pure function of the inputs (no wall clock)."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg)
     ts = doc_ts.select(
         F.col(id_col).alias("doc_id"),

@@ -126,10 +126,9 @@ def search_fuzzy(
     """Anytime top-k with OOV query terms spell-corrected (distance ≤ 1)
     before the ordinary segment pipeline. In-vocabulary terms are served
     exactly as typed — corrections never override the user."""
-    q_terms, _ = parse_queries(queries, *_query_conf(index))
+    q_terms = parse_queries(queries, *_query_conf(index))
     qt2 = correct_query_terms(index, q_terms)
-    qm2 = qt2.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
-    return search_from_terms(index, qt2, qm2, k=k, rho=rho, with_keys=with_keys)
+    return search_from_terms(index, qt2, k=k, rho=rho, with_keys=with_keys)
 
 
 def search_synonyms(
@@ -148,16 +147,16 @@ def search_synonyms(
     synonym INHERITS the original term's q_tf (a duplicated typed term
     boosts its synonyms too), colliding terms sum q_tf, and the expanded
     term set flows through the UNCHANGED serve chain. n_terms (the uint8
-    rescale divisor) counts the expanded set pre-vocab-drop, mirroring
-    `search`'s pre-drop count; out-of-vocabulary synonyms drop at the
-    vocab join exactly like typed OOV terms — and an OOV typed term with
-    an in-vocabulary synonym is thereby RESCUED (the query matches via
-    the synonym alone).
+    rescale divisor, which gather_segments counts over the term set it is
+    given) counts the expanded set pre-vocab-drop, as in `search`;
+    out-of-vocabulary synonyms drop at the vocab join exactly like typed
+    OOV terms — and an OOV typed term with an in-vocabulary synonym is
+    thereby RESCUED (the query matches via the synonym alone).
 
     Scale shape: the synonym table is a broadcast probe of the tiny
     parsed-terms set; everything downstream is the ordinary serve path
     (costs and pruning unchanged, just more terms)."""
-    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
     syn = F.broadcast(synonyms.select("term", "synonym"))
     extra = q_terms.join(syn, "term").select(
         "query_id", F.col("synonym").alias("term"), "q_tf"
@@ -168,12 +167,7 @@ def search_synonyms(
         .groupBy("query_id", "term")
         .agg(F.sum("q_tf").cast("long").alias("q_tf"))
     )
-    q_meta = expanded.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
-    from jassv2_spark.operators.search import search_from_terms
-
-    return search_from_terms(
-        index, expanded, q_meta, k=k, rho=rho, with_keys=with_keys
-    )
+    return search_from_terms(index, expanded, k=k, rho=rho, with_keys=with_keys)
 
 
 def suggest_queries(
@@ -273,13 +267,14 @@ def search_prefix(
     rewrite); expansions inherit the typed term's q_tf and colliding
     expansions sum. Shorter terms, and probes matching nothing, pass
     through literally (OOV then drops at the vocab join, the engine's
-    ordinary silent-miss rule). n_terms counts the expanded set
-    pre-vocab-drop, mirroring `search`'s pre-drop count.
+    ordinary silent-miss rule). n_terms, which gather_segments counts
+    over the term set it is given, counts the expanded set pre-vocab-drop,
+    as in `search`.
 
     Scale shape: expansion is :func:`prefix_term_expansions`'s broadcast
     nested-loop probe over ONE vocabulary scan; everything downstream is
     the unchanged serve chain (segment pruning, ρ, top-k)."""
-    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
     long_terms = q_terms.where(F.length("term") >= F.lit(int(min_prefix)))
     cand = prefix_term_expansions(
         index.term_stats,
@@ -303,10 +298,7 @@ def search_prefix(
         .groupBy("query_id", "term")
         .agg(F.sum("q_tf").cast("long").alias("q_tf"))
     )
-    q_meta = expanded.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
-    return search_from_terms(
-        index, expanded, q_meta, k=k, rho=rho, with_keys=with_keys
-    )
+    return search_from_terms(index, expanded, k=k, rho=rho, with_keys=with_keys)
 
 
 def corpus_bigrams(

@@ -37,7 +37,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from jassv2_spark.operators.build import Index
-from jassv2_spark.operators.search import DEFAULT_K, _query_conf, parse_queries, search
+from jassv2_spark.operators.search import (
+    DEFAULT_K,
+    _query_conf,
+    _with_n_terms,
+    parse_queries,
+    search,
+)
 
 MICRO = 1_000_000
 
@@ -56,7 +62,7 @@ def ltr_features(
         index, queries, k=k, rho=rho, tokenizer=tokenizer, with_keys=False
     ).select("query_id", "doc_id", "rsv", "rank")
 
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = _with_n_terms(parse_queries(queries, *_query_conf(index, tokenizer)))
 
     # matched postings: query terms × index postings, restricted to the
     # candidate docs (broadcast both tiny sides).
@@ -79,7 +85,7 @@ def ltr_features(
 
     feats = (
         matched.join(idf_map, "df")
-        .groupBy("query_id", "doc_id")
+        .groupBy("query_id", "doc_id", "n_terms")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_matched"),
             F.sum("tf").cast("long").alias("sum_tf"),
@@ -91,7 +97,6 @@ def ltr_features(
     )
     return (
         topk.join(feats, ["query_id", "doc_id"])
-        .join(F.broadcast(q_meta), "query_id")
         .join(index.doc_lengths, "doc_id")
         .select(
             "query_id",

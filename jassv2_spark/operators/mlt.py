@@ -101,8 +101,7 @@ def more_like_this(
     (query_id='m<seed>', doc_id, [key,] rsv, rank), seed excluded."""
     qt = mlt_query_terms(index, seed_ids, m=m).cache()
     q_terms = qt.select("query_id", "term", "q_tf")
-    q_meta = qt.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    seg = gather_segments(index, q_terms, rho=rho)
     seed_map = qt.select("query_id", "seed").distinct()
     hits = _accumulate_hits(index, q_terms, seg).join(
         F.broadcast(seed_map), "query_id"

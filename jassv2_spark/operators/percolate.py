@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from jassv2_spark.functions.tokenizer import spark_tokens
 from jassv2_spark.operators.build import Index
-from jassv2_spark.operators.search import _query_conf, parse_queries
+from jassv2_spark.operators.search import _query_conf, _with_n_terms, parse_queries
 
 MICRO = 1_000_000
 
@@ -57,7 +57,7 @@ def percolate(
     for each incoming doc, its top-m registered queries."""
     spark = index.spark
     tokenizer, stem = _query_conf(index, tokenizer)
-    q_terms, q_meta = parse_queries(registered, tokenizer, stem)
+    q_terms = _with_n_terms(parse_queries(registered, tokenizer, stem))
 
     # idf lookup from the BASE index vocabulary, restricted to registered
     # terms (tiny), ln driver-side per distinct df.
@@ -73,7 +73,9 @@ def percolate(
     idf_map = spark.createDataFrame(idf_rows, schema="term string, idf_micros long")
 
     qside = F.broadcast(
-        q_terms.join(idf_map, "term").select("query_id", "term", "q_tf", "idf_micros")
+        q_terms.join(idf_map, "term").select(
+            "query_id", "term", "q_tf", "idf_micros", "n_terms"
+        )
     )
 
     tok = spark_tokens(text_col, mode=tokenizer, xml=False)
@@ -89,14 +91,13 @@ def percolate(
 
     scored = (
         doc_tf.join(qside, "term")
-        .groupBy("doc_id", "query_id")
+        .groupBy("doc_id", "query_id", "n_terms")
         .agg(
             F.sum(F.col("q_tf") * F.col("tf") * F.col("idf_micros"))
             .cast("long")
             .alias("score_micros"),
             F.count(F.lit(1)).cast("long").alias("n_matched"),
         )
-        .join(F.broadcast(q_meta), "query_id")
     )
     if full_only:
         scored = scored.where(F.col("n_matched") == F.col("n_terms"))

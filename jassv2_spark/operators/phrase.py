@@ -258,11 +258,11 @@ def parse_phrase_bigrams(
     query_id_col: str = "query_id",
     phrase_col: str = "phrase",
     tokenizer: str = "parity",
-) -> tuple[DataFrame, DataFrame]:
-    """Phrase text → (q_terms(query_id, bigram term, q_tf), q_meta) for
-    serving against a bigram index. A one-token phrase yields no bigrams
-    (route those to the ordinary index); a repeated-token phrase yields
-    q_tf > 1, exactly like a repeated query term in the main parser."""
+) -> DataFrame:
+    """Phrase text → q_terms(query_id, bigram term, q_tf) for serving
+    against a bigram index. A one-token phrase yields no bigrams (route
+    those to the ordinary index); a repeated-token phrase yields q_tf > 1,
+    exactly like a repeated query term in the main parser."""
     # materialize the tokenizer UDF before the HOF: Spark cannot evaluate a
     # Python UDF inside a lambda function (UNSUPPORTED_FEATURE), so the
     # token array must be a plain column when the bigram transform runs
@@ -271,9 +271,7 @@ def parse_phrase_bigrams(
         spark_tokens(phrase_col, mode=tokenizer).alias("__tk"),
     )
     toks = base.select("query_id", F.explode(_bigram_col("__tk")).alias("term"))
-    q_terms = toks.groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("q_tf"))
-    q_meta = q_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
-    return q_terms, q_meta
+    return toks.groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("q_tf"))
 
 
 def _bigram_col_from(col):
@@ -304,12 +302,8 @@ def phrase_topk_bigram(
     scorer — exactness needs a positional verify, phrase_match_counts)."""
     from jassv2_spark.operators.search import search_from_terms
 
-    q_terms, q_meta = parse_phrase_bigrams(
-        phrases, tokenizer=bigram_index.conf.tokenizer
-    )
-    return search_from_terms(
-        bigram_index, q_terms, q_meta, k=k, rho=rho, with_keys=with_keys
-    )
+    q_terms = parse_phrase_bigrams(phrases, tokenizer=bigram_index.conf.tokenizer)
+    return search_from_terms(bigram_index, q_terms, k=k, rho=rho, with_keys=with_keys)
 
 
 def _bm25_pseudo_term_topk(
@@ -411,8 +405,8 @@ def sdm_topk(
     )
 
     tokenizer, stem = _query_conf(index, tokenizer)
-    q_terms, q_meta = parse_queries(queries, tokenizer, stem)
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms = parse_queries(queries, tokenizer, stem)
+    seg = gather_segments(index, q_terms, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg)
 
     qtk = queries.select(

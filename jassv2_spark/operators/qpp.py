@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jassv2_spark.operators.build import Index
-from jassv2_spark.operators.search import _query_conf, parse_queries
+from jassv2_spark.operators.search import _query_conf, _with_n_terms, parse_queries
 
 MICRO = 1_000_000
 
@@ -47,7 +47,7 @@ def qpp_features(
     """(query_id, n_terms, n_vocab, sum_idf_micros, max_idf_micros,
     sum_scq_micros, max_scq_micros, scope_ppm) — all exact integers."""
     spark = index.spark
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = _with_n_terms(parse_queries(queries, *_query_conf(index, tokenizer)))
 
     ctf = (
         index.postings.join(
@@ -106,7 +106,8 @@ def qpp_features(
     )
 
     return (
-        q_meta.select("query_id", F.col("n_terms").cast("long").alias("n_terms"))
+        q_terms.select("query_id", F.col("n_terms").cast("long").alias("n_terms"))
+        .distinct()
         .join(per_q, "query_id", "left")
         .join(scope, "query_id", "left")
         .na.fill(0)

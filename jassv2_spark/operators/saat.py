@@ -57,7 +57,7 @@ import tempfile
 import time
 import uuid
 from collections import Counter
-from typing import Callable, Iterator
+from typing import Any, Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -71,17 +71,17 @@ from jassv2_spark.operators.search import MAX_RSV
 # per-worker cache: path -> mmap'd ndarray. The mappings are page-cache-
 # backed (cheap RAM-wise) but each holds an open file descriptor, so a
 # long-lived worker serving many packages would otherwise accumulate fds
-# without bound — BOUNDED with the same FIFO eviction as _DIR_CACHE
-# (evicted entries close their fd when the last ndarray view drops).
+# without bound — BOUNDED by _lru (evicted entries close their fd when
+# the last ndarray view drops).
 _MMAP_CACHE: dict[str, np.ndarray] = {}
 _MMAP_CACHE_MAX = 512  # open shard fds per worker across all packages
 
 # per-worker cache: directory-parquet path -> {term: [(impact, seg_freq,
 # shard, start, end)] impact-ascending}. A worker only ever populates the
-# buckets its queries' terms hash to. BOUNDED (FIFO eviction): unlike the
-# mmap cache (page-cache-backed, cheap to keep), these are materialized
-# heap dicts, and a long-lived worker serving many packages would
-# otherwise grow without bound.
+# buckets its queries' terms hash to. BOUNDED by _lru: unlike the mmap
+# cache (page-cache-backed, cheap to keep), these are materialized heap
+# dicts, and a long-lived worker serving many packages would otherwise
+# grow without bound.
 _DIR_CACHE: dict[str, dict[str, list[tuple[int, int, int, int, int]]]] = {}
 _DIR_CACHE_MAX = 256  # buckets resident per worker across all packages
 
@@ -278,20 +278,44 @@ def _resolve(path: str) -> str:
     return resolved
 
 
+def _lru(cache: dict, cap: int, key: str, load: Callable[[], Any]) -> Any:
+    """cache[key], loaded by `load()` on a miss; at most `cap` entries,
+    evicting the least recently used. A dict keeps insertion order, so a
+    hit re-inserts its key at the end: without that touch a working set
+    above the cap evicts its hottest entries first and reloads them on
+    every query."""
+    value = cache.pop(key, None)
+    if value is None:
+        value = load()
+        while len(cache) >= cap:
+            cache.pop(next(iter(cache)))
+    cache[key] = value
+    return value
+
+
 def _load_shard(pkg: dict, shard: int) -> np.ndarray:
     path = os.path.join(pkg["dir"], f"shard_{pkg['token']}_{shard:05d}.npy")
-    arr = _MMAP_CACHE.get(path)
-    if arr is None:
-        arr = np.load(_resolve(path), mmap_mode="r", allow_pickle=False)
-        while len(_MMAP_CACHE) >= _MMAP_CACHE_MAX:
-            _MMAP_CACHE.pop(next(iter(_MMAP_CACHE)))  # evict least-recent
-    else:
-        # LRU touch (dict preserves insertion order): without it a
-        # working set above the cap evicts its hottest shards first and
-        # thrashes np.load on every query
-        _MMAP_CACHE.pop(path)
-    _MMAP_CACHE[path] = arr
-    return arr
+    return _lru(
+        _MMAP_CACHE, _MMAP_CACHE_MAX, path,
+        lambda: np.load(_resolve(path), mmap_mode="r", allow_pickle=False),
+    )
+
+
+def _read_directory(path: str) -> dict[str, list[tuple[int, int, int, int, int]]]:
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(_resolve(path))
+    table: dict[str, list[tuple[int, int, int, int, int]]] = {}
+    for term, impact, seg_freq, shard, start, end in zip(
+        t["term"].to_pylist(), t["impact"].to_pylist(), t["seg_freq"].to_pylist(),
+        t["shard"].to_pylist(), t["start"].to_pylist(), t["end"].to_pylist(),
+    ):
+        table.setdefault(term, []).append(
+            (int(impact), int(seg_freq), int(shard), int(start), int(end))
+        )
+    for segs in table.values():
+        segs.sort()  # impact-ascending within a term
+    return table
 
 
 def _bucket_directory(pkg: dict, bucket: int) -> dict[str, list[tuple[int, int, int, int, int]]]:
@@ -299,25 +323,7 @@ def _bucket_directory(pkg: dict, bucket: int) -> dict[str, list[tuple[int, int, 
     touches only the buckets its terms hash to — the vocab never exists
     whole in any single process."""
     path = os.path.join(pkg["dir"], f"dir_{pkg['token']}_{bucket:05d}.parquet")
-    table = _DIR_CACHE.get(path)
-    if table is None:
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(_resolve(path))
-        table = {}
-        for term, impact, seg_freq, shard, start, end in zip(
-            t["term"].to_pylist(), t["impact"].to_pylist(), t["seg_freq"].to_pylist(),
-            t["shard"].to_pylist(), t["start"].to_pylist(), t["end"].to_pylist(),
-        ):
-            table.setdefault(term, []).append(
-                (int(impact), int(seg_freq), int(shard), int(start), int(end))
-            )
-        for segs in table.values():
-            segs.sort()  # impact-ascending within a term
-        while len(_DIR_CACHE) >= _DIR_CACHE_MAX:
-            _DIR_CACHE.pop(next(iter(_DIR_CACHE)))  # FIFO eviction
-        _DIR_CACHE[path] = table
-    return table
+    return _lru(_DIR_CACHE, _DIR_CACHE_MAX, path, lambda: _read_directory(path))
 
 
 def _term_segs(pkg: dict, term: str) -> list[tuple[int, int, int, int, int]] | None:

@@ -54,8 +54,9 @@ MAX_TOP_K = 1000  # source/query.h:136
 
 def parse_queries(
     queries: DataFrame, tokenizer: str = "parity", stem: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """(query_id, query) → (q_terms(query_id, term, q_tf), q_meta(query_id, n_terms)).
+) -> DataFrame:
+    """(query_id, query) → q_terms(query_id, term, q_tf): one row per
+    unique term of each query.
 
     `stem` must match the index's build setting for vocabulary consistency
     (the reference shares one parser between build and query)."""
@@ -65,9 +66,16 @@ def parse_queries(
 
         tok_col = spark_stem(tok_col)
     toks = queries.select("query_id", F.explode(tok_col).alias("term"))
-    q_terms = toks.groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("q_tf"))
-    q_meta = q_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
-    return q_terms, q_meta
+    return toks.groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("q_tf"))
+
+
+def _with_n_terms(q_terms: DataFrame) -> DataFrame:
+    """`q_terms` plus n_terms, its query's row count: the uint8-rescale
+    divisor, counted before the vocab join so OOV terms count
+    (JASS_anytime_api.cpp:484-495). The engine's only n_terms rule."""
+    return q_terms.withColumn(
+        "n_terms", F.count(F.lit(1)).over(Window.partitionBy("query_id"))
+    )
 
 
 def _query_conf(index: Index, tokenizer: str | None = None) -> tuple[str, bool]:
@@ -80,30 +88,32 @@ def _query_conf(index: Index, tokenizer: str | None = None) -> tuple[str, bool]:
 def gather_segments(
     index: Index,
     q_terms: DataFrame,
-    q_meta: DataFrame,
     rho: float = 1.0,
     postings_budget: int | None = None,
 ) -> DataFrame:
     """Matched, scaled, ordered, ρ-filtered segments per query.
 
-    Returns (query_id, term, impact, seg_freq, simpact, scaled, seg_rank,
-    cum_postings) — the processed-segment set.
+    Returns (query_id, n_terms, term, q_tf, impact, seg_freq, simpact,
+    largest_rsv, total_postings, scaled, seg_rank, cum_postings) — the
+    processed-segment set. n_terms rides through both aggregates below so
+    the segment branch and the largest_rsv branch plan the same query
+    side, which AQE then runs once.
     """
     matched = (
-        F.broadcast(q_terms)
+        F.broadcast(_with_n_terms(q_terms))
         .join(index.seg_stats, "term")
         .withColumn("simpact", (F.col("impact") * F.col("q_tf")).cast("long"))
     )
 
-    per_term = matched.groupBy("query_id", "term").agg(
+    per_term = matched.groupBy("query_id", "n_terms", "term").agg(
         F.max("simpact").alias("term_max"), F.sum("seg_freq").alias("term_postings")
     )
-    q_agg = per_term.groupBy("query_id").agg(
+    q_agg = per_term.groupBy("query_id", "n_terms").agg(
         F.sum("term_max").alias("largest_rsv"),
         F.sum("term_postings").alias("total_postings"),
     )
 
-    seg = matched.join(F.broadcast(q_agg), "query_id").join(F.broadcast(q_meta), "query_id")
+    seg = matched.join(F.broadcast(q_agg), ["query_id", "n_terms"])
 
     scaled = F.when(
         F.col("largest_rsv") > F.lit(MAX_RSV),
@@ -145,9 +155,9 @@ def search(
     """Batch top-k search. Returns (query_id, doc_id[, key], rsv, rank).
     Large candidate sets auto-route through the row-identical doc-sharded
     ranking plan (see search_from_terms)."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
     return search_from_terms(
-        index, q_terms, q_meta, k=k, rho=rho,
+        index, q_terms, k=k, rho=rho,
         postings_budget=postings_budget, with_keys=with_keys,
         auto_shard_threshold=auto_shard_threshold,
     )
@@ -225,7 +235,6 @@ def _auto_shards(
 def _serve(
     index: Index,
     q_terms: DataFrame,
-    q_meta: DataFrame,
     *,
     k: int,
     rho: float,
@@ -237,7 +246,7 @@ def _serve(
     """The serve skeleton from parsed terms: gather_segments → optional
     `seg_filter` (a function from the processed-segment set to a subset
     of it, e.g. WAND's prune_segments) → accumulate → top-k epilogue."""
-    seg = gather_segments(index, q_terms, q_meta, rho=rho, postings_budget=postings_budget)
+    seg = gather_segments(index, q_terms, rho=rho, postings_budget=postings_budget)
     if seg_filter is not None:
         seg = seg_filter(seg)
     hits = _accumulate_hits(index, q_terms, seg)
@@ -247,7 +256,6 @@ def _serve(
 def search_from_terms(
     index: Index,
     q_terms: DataFrame,
-    q_meta: DataFrame,
     k: int = DEFAULT_K,
     rho: float = 1.0,
     postings_budget: int | None = None,
@@ -257,8 +265,8 @@ def search_from_terms(
     """`search` from a prebuilt (query_id, term, q_tf) table — the entry
     point for callers that construct term weights directly rather than
     parsing query text (e.g. RM3 expanded queries, operators/feedback.py).
-    `q_meta` must carry (query_id, n_terms) with n_terms counted over
-    q_terms rows (the uint8-rescale divisor, JASS_anytime_api.cpp:544-563).
+    The uint8-rescale divisor n_terms is the row count of each query's
+    `q_terms` (JASS_anytime_api.cpp:544-563), derived in gather_segments.
 
     Auto-sharding: when any query's processed-postings count exceeds
     ``auto_shard_threshold`` (default AUTO_SHARD_THRESHOLD), ranking runs
@@ -270,7 +278,7 @@ def search_from_terms(
     value to force the single-window plan.
     """
     return _serve(
-        index, q_terms, q_meta, k=k, rho=rho, postings_budget=postings_budget,
+        index, q_terms, k=k, rho=rho, postings_budget=postings_budget,
         with_keys=with_keys, n_shards=_auto_shards(index, q_terms, auto_shard_threshold),
     )
 
@@ -342,9 +350,9 @@ def search_sharded(
     coincide. ρ / postings budgets act on the global metadata before any
     sharding, hence are also unchanged.
     """
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
     return _serve(
-        index, q_terms, q_meta, k=k, rho=rho, postings_budget=postings_budget,
+        index, q_terms, k=k, rho=rho, postings_budget=postings_budget,
         with_keys=with_keys, n_shards=int(n_shards),
     )
 
@@ -390,7 +398,7 @@ def search_conjunctive(
     accumulator union, `anytime/JASS_anytime_api.cpp:578-648`); conjunctive
     filtering is the standard web-search default this engine adds. A term
     that is out-of-vocabulary empties its query's results (true AND):
-    n_terms counts terms BEFORE the vocab drop (parse_queries), and the
+    n_terms counts terms BEFORE the vocab drop (gather_segments), and the
     per-doc distinct-matched-term count is compared against it.
 
     Plan: identical to `search` (broadcast query side, one (query, doc)
@@ -398,16 +406,15 @@ def search_conjunctive(
     ρ budgets are meaningless under AND semantics (a skipped segment could
     drop a qualifying doc), so none is offered.
     """
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=1.0)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=1.0)
     hits = (
-        _processed_postings(index, q_terms, seg, "term")
-        .groupBy("query_id", "doc_id")
+        _processed_postings(index, q_terms, seg, "term", "n_terms")
+        .groupBy("query_id", "doc_id", "n_terms")
         .agg(
             F.sum("scaled").alias("rsv"),
             F.count_distinct(F.col("term")).alias("nt"),
         )
-        .join(F.broadcast(q_meta), "query_id")
         .where(F.col("nt") == F.col("n_terms"))
     )
     return _rank_topk(index, hits, k, with_keys)
@@ -422,8 +429,8 @@ def search_metrics(
 ) -> DataFrame:
     """Per-query stats: postings_processed / segments_processed /
     total_postings / largest_rsv (mirrors `anytime/JASS_anytime_result.h`)."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho, postings_budget=postings_budget)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho, postings_budget=postings_budget)
     return seg.groupBy("query_id").agg(
         F.sum("seg_freq").alias("postings_processed"),
         F.count(F.lit(1)).alias("segments_processed"),
@@ -475,8 +482,8 @@ def search_after(
     the broadcast cursor join is queries-sized. One (query_id, doc_id)
     hash-agg shuffle + one windowed top-k, same as `search`.
     """
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho, postings_budget=postings_budget)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho, postings_budget=postings_budget)
     hits = _accumulate_hits(index, q_terms, seg)
 
     cur = F.broadcast(cursors.select("query_id", "after_rsv", "after_doc"))
@@ -506,11 +513,9 @@ def explain_topk(
     tiny top-k broadcast back in so only hit docids survive to the one
     (query, doc, term)-keyed agg — explain costs one extra serve pass,
     never a corpus pass."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
-    topk = search_from_terms(
-        index, q_terms, q_meta, k=k, rho=rho, with_keys=False
-    )
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
+    topk = search_from_terms(index, q_terms, k=k, rho=rho, with_keys=False)
     return (
         _processed_postings(index, q_terms, seg, "term")
         .join(
@@ -549,7 +554,7 @@ def search_deduped(
     (query-sized frames throughout); the serve chain runs on the
     distinct-key representatives only; fan-out is a broadcast join of
     the query→representative map onto the top-k rows."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
     keys = q_terms.groupBy("query_id").agg(
         F.array_join(
             F.array_sort(
@@ -566,12 +571,7 @@ def search_deduped(
         )
         .select("query_id", "term", "q_tf")
     )
-    rep_meta = q_meta.join(
-        F.broadcast(qmap.where(F.col("query_id") == F.col("__rep"))), "query_id"
-    ).select("query_id", "n_terms")
-    res = search_from_terms(
-        index, rep_terms, rep_meta, k=k, rho=rho, with_keys=with_keys
-    )
+    res = search_from_terms(index, rep_terms, k=k, rho=rho, with_keys=with_keys)
     out_cols = ["query_id", "doc_id", "key", "rsv", "rank"] if with_keys else [
         "query_id", "doc_id", "rsv", "rank"
     ]
@@ -603,8 +603,8 @@ def search_min_match(
     Scale shape: identical to `search` except the one hash-agg carries
     the term through the explode (same shuffle key, one extra small
     column) and adds a count-distinct per (query, doc)."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
     hits = (
         _processed_postings(index, q_terms, seg, "term")
         .groupBy("query_id", "doc_id")
@@ -648,7 +648,7 @@ def search_common_dropped(
     against term_stats + a per-query window over query-length rows;
     the serve chain then runs on fewer terms — strictly less work
     than `search`."""
-    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
     n = int(index.n_docs)
     stats = F.broadcast(index.term_stats.select("term", "df"))
     qt = q_terms.join(stats, "term", "left")
@@ -665,8 +665,7 @@ def search_common_dropped(
     kept = qt.where(~F.col("__common") | (F.col("__n_rare") == 0)).select(
         "query_id", "term", "q_tf"
     )
-    q_meta = kept.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
-    return search_from_terms(index, kept, q_meta, k=k, rho=rho, with_keys=with_keys)
+    return search_from_terms(index, kept, k=k, rho=rho, with_keys=with_keys)
 
 
 def search_term_sharded(
@@ -696,8 +695,8 @@ def search_term_sharded(
     hash-agg — each reducer sees one term-slice's postings (a hot
     term's explode stays inside its own shard); stage 2 = the
     (query, doc) merge over pre-combined partials."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho).withColumn(
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho).withColumn(
         "__shard", F.pmod(F.xxhash64("term"), F.lit(int(n_shards)))
     )
     partials = (
@@ -723,7 +722,7 @@ def float_reference_topk(
     and summed as exact integers with the typed q_tf weights. This is
     what the engine would return with no impact quantization at all;
     `quantization_audit` measures the engine against it."""
-    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
     sc = index.scored.select(
         "term", "doc_id",
         F.expr("cast(floor(1000000 * score) as bigint)").alias("__w"),

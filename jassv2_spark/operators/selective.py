@@ -47,6 +47,7 @@ from jassv2_spark.operators.search import (
     _processed_postings,
     _query_conf,
     _rank_topk,
+    _with_n_terms,
     gather_segments,
     parse_queries,
 )
@@ -92,8 +93,8 @@ def shard_scores(
     """(query_id, shard, votes, score_micros, shard_rank): the ReDDE
     resource-selection decision. Shards with zero CSI votes emit no row
     (score 0 — never selected)."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
     thresh = int(sample_frac * (1 << 32))
     csi_hits = _hits_filtered(index, q_terms, seg, lambda d: _bucket(d) < F.lit(thresh))
     top = _rank_topk(index, csi_hits, int(n_csi), False)
@@ -142,8 +143,8 @@ def _serve_selected(
     """Top-k restricted to each query's `sel(query_id, sel_shards)` set —
     the shared serve half of search_selective / search_cori. Map-side
     doc_ids prune, post-filter semantics (global rsv, local ranks)."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
     hits = _hits_filtered(
         index,
         q_terms,
@@ -240,14 +241,14 @@ def cori_shard_scores(
     scored for every query with ≥1 in-vocab term.
     """
     c = int(n_shards)
-    q_terms, _ = parse_queries(queries, *_query_conf(index, tokenizer))
-    # in-vocabulary distinct query terms (OOV silently dropped, as serve does)
-    qt = (
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    # in-vocabulary distinct query terms (OOV silently dropped, as serve
+    # does), each carrying its query's in-vocabulary term count n_terms
+    qt = _with_n_terms(
         q_terms.select("query_id", "term")
         .join(index.term_stats.select("term"), "term", "left_semi")
         .distinct()
     )
-    nq = qt.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
 
     shard_of = F.pmod(F.col("doc_id"), F.lit(c)).alias("shard")
     dfts = (
@@ -297,9 +298,8 @@ def cori_shard_scores(
         )
     )
     scored = (
-        beliefs.groupBy("query_id", "shard")
+        beliefs.groupBy("query_id", "n_terms", "shard")
         .agg(F.sum("belief_micros").alias("belief_sum"))
-        .join(F.broadcast(nq), "query_id")
         .withColumn("score_micros", F.expr("belief_sum DIV n_terms").cast("long"))
     )
     wr = Window.partitionBy("query_id").orderBy(

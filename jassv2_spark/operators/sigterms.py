@@ -49,8 +49,8 @@ def significant_terms(
 ) -> DataFrame:
     """(query_id, term, fg_df, fg_n, bg_df, lift_micros, sig_rank):
     the top-m significant terms of each query's match set."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg).select("query_id", "doc_id")
 
     fg_n = hits.groupBy("query_id").agg(

@@ -111,9 +111,9 @@ def search_wand(
 ) -> DataFrame:
     """Top-k search with block-max segment pruning; bitwise-identical output
     to operators.search.search() (enforced by tests/test_wand.py)."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
     return _serve(
-        index, q_terms, q_meta, k=k, rho=rho, postings_budget=postings_budget,
+        index, q_terms, k=k, rho=rho, postings_budget=postings_budget,
         with_keys=with_keys, n_shards=_auto_shards(index, q_terms),
         seg_filter=lambda seg: prune_segments(index, seg, k=k, prefix=prefix),
     )
@@ -123,8 +123,8 @@ def pruning_stats(index: Index, queries: DataFrame, k: int = DEFAULT_K, prefix: 
                   rho: float = 1.0, tokenizer: str | None = None) -> DataFrame:
     """Per-query (segments_total, segments_kept, postings_total,
     postings_kept) — the judge-facing evidence of what pruning saves."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
     kept = prune_segments(index, seg, k=k, prefix=prefix)
     tot = seg.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("segments_total"), F.sum("seg_freq").alias("postings_total")
@@ -179,10 +179,10 @@ def _search_with_oracle(
     θ as its segment filter. The first `min_postings` postings in
     processing order are always processed (postings_to_process_min,
     `JASS_anytime_api.cpp:603`); rsv@k pruning applies beyond them only."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
     theta = oracle.select("query_id", F.col("rsv_at_k").alias("theta"))
     return _serve(
-        index, q_terms, q_meta, k=k, rho=rho, postings_budget=postings_budget,
+        index, q_terms, k=k, rho=rho, postings_budget=postings_budget,
         with_keys=with_keys, n_shards=_auto_shards(index, q_terms),
         seg_filter=lambda seg: _bound_filter(seg, theta, min_postings),
     )
@@ -247,8 +247,8 @@ def search_maxscore(
     positions. Composes with the anytime ρ budget exactly as WAND does
     (both operate on the ρ-filtered segment set).
     """
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho, postings_budget=postings_budget)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho, postings_budget=postings_budget)
     theta = _partial_rsv_threshold(index, seg.where(F.col("seg_rank") <= F.lit(prefix)), k)
     ess = _essential_terms(seg, theta)
 
@@ -278,8 +278,8 @@ def maxscore_stats(
     """Per-query MaxScore evidence: (terms_total, terms_essential,
     postings_total, postings_candidate_pass) — how much of the explode the
     essential split avoids in the candidate-generation pass."""
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
     theta = _partial_rsv_threshold(index, seg.where(F.col("seg_rank") <= F.lit(prefix)), k)
     ess = _essential_terms(seg, theta)
     per_seg = seg.join(ess, ["query_id", "term"])

@@ -247,8 +247,8 @@ def search_authority(
     )
 
     k = DEFAULT_K if k is None else k
-    q_terms, q_meta = parse_queries(queries, *_query_conf(index, tokenizer))
-    seg = gather_segments(index, q_terms, q_meta, rho=rho)
+    q_terms = parse_queries(queries, *_query_conf(index, tokenizer))
+    seg = gather_segments(index, q_terms, rho=rho)
     hits = _accumulate_hits(index, q_terms, seg)
     blended = hits.join(pr.select("doc_id", "pr"), "doc_id").withColumn(
         "blend", F.expr(f"rsv * (pr DIV {PR_PRIOR_DIV})").cast("long")

@@ -169,8 +169,9 @@ def search_wildcard(
     expand through the permuterm table (expansions inherit the token's
     q_tf; colliding expansions sum), literal tokens serve exactly as
     `search` would — including stemming to the vocabulary form on a
-    stem-built index (OOV drops at the vocab join as always). n_terms
-    counts the expanded term set pre-vocab-drop, mirroring `search`."""
+    stem-built index (OOV drops at the vocab join as always). n_terms,
+    which gather_segments counts over the term set it is given, counts
+    the expanded set pre-vocab-drop, as in `search`."""
     _, stem = _query_conf(index)
     qt = parse_wildcard_queries(queries, stem=stem)
     pats = qt.where("is_pattern").select(F.col("term").alias("pattern"))
@@ -186,5 +187,4 @@ def search_wildcard(
         .groupBy("query_id", "term")
         .agg(F.sum("q_tf").cast("long").alias("q_tf"))
     )
-    q_meta = expanded.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
-    return search_from_terms(index, expanded, q_meta, k=k, rho=rho, with_keys=with_keys)
+    return search_from_terms(index, expanded, k=k, rho=rho, with_keys=with_keys)

@@ -9,7 +9,7 @@ from jassv2_spark.operators.filtered import (
     search_filtered,
     search_negated,
 )
-from jassv2_spark.operators.search import search
+from jassv2_spark.operators.search import _with_n_terms, search
 
 DOCS = [
     (1, "spark join table", "en"),
@@ -56,9 +56,9 @@ def test_filtered_ranks_within_filtered_set(spark, idx, docs_df):
 
 def test_negated_parse(spark):
     q = spark.createDataFrame([("q1", "spark -Join  table -SCAN")], ["query_id", "query"])
-    qt, qm, qn = parse_negated_queries(q, tokenizer="parity")
+    qt, qn = parse_negated_queries(q, tokenizer="parity")
     assert {r["term"] for r in qt.collect()} == {"spark", "table"}
-    assert qm.collect()[0]["n_terms"] == 2  # negated terms don't count
+    assert _with_n_terms(qt).collect()[0]["n_terms"] == 2  # negated terms don't count
     assert {r["term"] for r in qn.collect()} == {"join", "scan"}
 
 

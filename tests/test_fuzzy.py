@@ -85,7 +85,7 @@ def tiny_index(spark):
 
 def test_correction_merges_qtf_and_drops_hopeless(spark, tiny_index):
     q = spark.createDataFrame([("q1", "spark sparkk zzzzzzz")], ["query_id", "query"])
-    qt, _ = parse_queries(q, tokenizer="parity")
+    qt = parse_queries(q, tokenizer="parity")
     got = {r["term"]: r["q_tf"] for r in correct_query_terms(tiny_index, qt).collect()}
     # 'sparkk' corrects to 'spark' (dist 1) and merges with the typed 'spark'
     assert got == {"spark": 2}

@@ -38,7 +38,9 @@ def test_saat_ten_docs_budget(spark):
     rows = [(r["url"], r["html"].decode()) for r in ten_documents()]
     docs = spark.createDataFrame(rows, ["url", "html"])
     idx = build_index(docs, text_col="html", key_col="url")
-    qdf = spark.createDataFrame(TEN_DOC_QUERIES, ["query_id", "query"])
+    # "zzz" is OOV but still counts: the rescale divisor n_terms is 3
+    queries = TEN_DOC_QUERIES + [("q7", "ten nine zzz")]
+    qdf = spark.createDataFrame(queries, ["query_id", "query"])
     for budget in [5, 15]:
         a = _collect(search(idx, qdf, k=10, postings_budget=budget, with_keys=False))
         b = _collect(saat_search(idx, qdf, k=10, postings_budget=budget))
@@ -197,9 +199,9 @@ def test_saat_empty_queries(spark, syn):
 
 def test_mmap_cache_bounded():
     """Review follow-up (round-3 verdict #8): mmaps are page-cache-backed
-    but hold an open fd each — _load_shard must evict FIFO past the cap
-    exactly like _DIR_CACHE, so a long-lived worker serving many packages
-    cannot accumulate file descriptors without bound."""
+    but hold an open fd each — _load_shard must evict past the cap exactly
+    like _DIR_CACHE, so a long-lived worker serving many packages cannot
+    accumulate file descriptors without bound."""
     import numpy as np
 
     from jassv2_spark.operators import saat
@@ -235,3 +237,21 @@ def test_mmap_cache_bounded():
     finally:
         saat._MMAP_CACHE.clear()
         saat._MMAP_CACHE.update(saved)
+
+
+def test_dir_cache_evicts_least_recently_used(monkeypatch):
+    """A bucket directory hit refreshes its recency, so an eviction wave
+    past the cap drops the coldest bucket, not the first one loaded."""
+    from jassv2_spark.operators import saat
+
+    loads = []
+    monkeypatch.setattr(saat, "_DIR_CACHE", {})
+    monkeypatch.setattr(saat, "_DIR_CACHE_MAX", 3)
+    monkeypatch.setattr(saat, "_read_directory", lambda path: loads.append(path) or {})
+    pkg = {"dir": "pkg", "token": "tok"}
+    for bucket in [0, 1, 2, 0, 3, 0]:
+        saat._bucket_directory(pkg, bucket)
+    assert [p[-13:-8] for p in loads] == ["00000", "00001", "00002", "00003"]
+    assert len(saat._DIR_CACHE) == 3
+    saat._bucket_directory(pkg, 1)  # bucket 1 was the coldest: evicted
+    assert len(loads) == 5

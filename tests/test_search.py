@@ -7,7 +7,12 @@ import pytest
 
 from jassv2_spark.fixtures import TEN_DOC_QUERIES, synthetic_corpus, synthetic_queries, ten_documents
 from jassv2_spark.operators.build import build_index
-from jassv2_spark.operators.search import search, search_metrics, trec_run
+from jassv2_spark.operators.search import (
+    search,
+    search_common_dropped,
+    search_metrics,
+    trec_run,
+)
 from tests.oracle import PyIndex
 
 
@@ -45,10 +50,30 @@ def _spark_results(idx, spark, queries, k=10, rho=1.0):
 @pytest.mark.parametrize("rho", [1.0, 0.35])
 def test_ten_doc_queries_match_oracle(ten, spark, rho):
     idx, py = ten
-    got = _spark_results(idx, spark, TEN_DOC_QUERIES, k=10, rho=rho)
-    for qid, qtext in TEN_DOC_QUERIES:
+    # "zzz" is OOV but still counts: the rescale divisor n_terms is 3
+    queries = TEN_DOC_QUERIES + [("q7", "ten nine zzz")]
+    got = _spark_results(idx, spark, queries, k=10, rho=rho)
+    for qid, qtext in queries:
         want, _ = py.search(qtext, k=10, rho=rho)
         assert got.get(qid, []) == want, f"{qid} ({qtext!r}) rho={rho}"
+
+
+def _tokenizer_passes(df) -> int:
+    """tokenize_udf nodes in the plan `df` ran: collect it, then read the
+    final adaptive plan, the text above the top-level Initial Plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("\n+- == Initial Plan ==")[0].count("tokenize_udf")
+
+
+def test_serve_tokenizes_queries_once(ten, spark):
+    """The segment branch and the largest_rsv branch of gather_segments
+    share one query-side exchange, so a call runs the tokenizer once."""
+    idx, _ = ten
+    qdf = spark.createDataFrame(TEN_DOC_QUERIES, ["query_id", "query"])
+    assert _tokenizer_passes(search(idx, qdf, k=10)) == 1
+    assert _tokenizer_passes(search(idx, qdf, k=10, rho=0.3)) == 1
+    assert _tokenizer_passes(search_common_dropped(idx, qdf, k=10)) == 1
 
 
 def test_oov_query_empty(ten, spark):
